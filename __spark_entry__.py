@@ -45,6 +45,7 @@ from quanta_etl_spark.operators import sampling as samp_ops
 from quanta_etl_spark.operators import text_stats as ts_ops
 from quanta_etl_spark.operators import windows as win_ops
 from quanta_etl_spark.sources.testdata import load_table
+from quanta_etl_spark.streaming import ingest
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -75,6 +76,29 @@ def _dsum2(c: str | F.Column) -> F.Column:
     and verified to DIVERGE again past 2^53 cents, so the bound is
     measured, not assumed."""
     return F.round(F.sum(_dec(c)), 2).cast("double")
+
+
+def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
+    """The events table as a bounded file stream with its batch schema.
+    A single-FILE stream source needs a glob spelling (a bare file path
+    fails FileStreamSource's "basePath must be a directory" check)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # NTZ→TIMESTAMP conversion (normalize_event_time) reads the session
+    # tz; pin it so a driver-built session in a non-UTC environment
+    # can't shift instants relative to the DuckDB oracle's epoch().
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
+    return ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
+
+
+def _run_stream(
+    df: DataFrame, name: str, output_mode: str = "append"
+) -> DataFrame:
+    """Run a bounded stream (availableNow) into the in-memory table
+    ``name`` and return that table."""
+    q = ingest.write_stream_memory(df, name, output_mode=output_mode)
+    q.awaitTermination()
+    return df.sparkSession.table(name)
 
 
 # ---------------------------------------------------------------------------
@@ -631,15 +655,7 @@ def q_stream_sliding_window(spark: SparkSession, sf: str) -> DataFrame:
     each event lands in 2 overlapping windows). Bucket starts are
     emitted as epoch seconds so the oracle is timezone-proof; DuckDB
     reproduces Spark's epoch-aligned window starts arithmetically."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NTZ→TIMESTAMP conversion (normalize_event_time) reads the session
-    # tz; pin it so a driver-built session in a non-UTC environment
-    # can't shift instants relative to the DuckDB oracle's epoch().
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
+    stream = _events_stream(spark, sf)
     ev = ingest.normalize_event_time(stream)
     agg = (
         ingest.with_late_data_policy(ev, "ts", delay="1 hour")
@@ -651,11 +667,7 @@ def q_stream_sliding_window(spark: SparkSession, sf: str) -> DataFrame:
             F.max("value").alias("high"),
         )
     )
-    q = ingest.write_stream_memory(
-        agg, "stream_sliding_window", output_mode="complete"
-    )
-    q.awaitTermination()
-    return spark.table("stream_sliding_window").select(
+    return _run_stream(agg, "stream_sliding_window", "complete").select(
         F.unix_timestamp(F.col("win.start")).alias("bucket_start"),
         "event_type",
         "n_events",
@@ -695,21 +707,9 @@ def q_stream_stateful_running(spark: SparkSession, sf: str) -> DataFrame:
     micro-batches. Bounded single-batch input ⇒ equals the batch
     cumulative window, so this streaming path is hash-checked against
     a plain SQL window oracle."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NTZ→TIMESTAMP conversion (normalize_event_time) reads the session
-    # tz; pin it so a driver-built session in a non-UTC environment
-    # can't shift instants relative to the DuckDB oracle's epoch().
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
+    stream = _events_stream(spark, sf)
     out = ingest.running_event_stats(stream)
-    q = ingest.write_stream_memory(
-        out, "stream_stateful_running", output_mode="append"
-    )
-    q.awaitTermination()
-    return spark.table("stream_stateful_running")
+    return _run_stream(out, "stream_stateful_running")
 
 
 def q_stream_forward_fill(spark: SparkSession, sf: str) -> DataFrame:
@@ -722,12 +722,7 @@ def q_stream_forward_fill(spark: SparkSession, sf: str) -> DataFrame:
     it previously had only pytest coverage). (user_id, ts) is unique in
     the events data, so the within-batch sort by event time is
     tie-free and deterministic."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
+    stream = _events_stream(spark, sf)
     feed = ingest.normalize_event_time(stream).select(
         F.concat(F.lit("u"), F.col("user_id")).alias("isin"),
         F.col("ts").alias("trading_ts"),
@@ -736,11 +731,7 @@ def q_stream_forward_fill(spark: SparkSession, sf: str) -> DataFrame:
         ),
     )
     out = ingest.running_forward_fill(feed)
-    q = ingest.write_stream_memory(
-        out, "stream_forward_fill", output_mode="append"
-    )
-    q.awaitTermination()
-    return spark.table("stream_forward_fill")
+    return _run_stream(out, "stream_forward_fill")
 
 
 def q_unpivot_measures(spark: SparkSession, sf: str) -> DataFrame:
@@ -1044,16 +1035,7 @@ def q_stream_hourly_stats(spark: SparkSession, sf: str) -> DataFrame:
     high/low/count per event type. Deterministic aggregates only, so
     the BATCH SQL oracle must match — streaming and batch semantics
     agree on bounded input."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NTZ→TIMESTAMP conversion (normalize_event_time) reads the session
-    # tz; pin it so a driver-built session in a non-UTC environment
-    # can't shift instants relative to the DuckDB oracle's epoch().
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    # file streams take a directory/glob, not a bare file path
-    stream = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
+    stream = _events_stream(spark, sf)
     ev = ingest.normalize_event_time(stream)
     agg = (
         ingest.with_late_data_policy(ev, "ts", delay="1 hour")
@@ -1064,9 +1046,7 @@ def q_stream_hourly_stats(spark: SparkSession, sf: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
         )
     )
-    q = ingest.write_stream_memory(agg, "stream_hourly_stats", output_mode="complete")
-    q.awaitTermination()
-    return spark.table("stream_hourly_stats").select(
+    return _run_stream(agg, "stream_hourly_stats", "complete").select(
         F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias("bucket_ts"),
         "event_type",
         "high",
@@ -1082,15 +1062,7 @@ def q_stream_ohlcv(spark: SparkSession, sf: str) -> DataFrame:
     (fixed-width ts string + zero-padded event_id) ordering key so ties
     at the same microsecond stay deterministic; the value sum goes
     through decimal(20,6) on both sides so the hash can't drift."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NTZ→TIMESTAMP conversion (normalize_event_time) reads the session
-    # tz; pin it so a driver-built session in a non-UTC environment
-    # can't shift instants relative to the DuckDB oracle's epoch().
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
+    stream = _events_stream(spark, sf)
     ev = ingest.normalize_event_time(stream).withColumn(
         "vol", F.col("value").cast("decimal(20,6)")
     )
@@ -1107,9 +1079,7 @@ def q_stream_ohlcv(spark: SparkSession, sf: str) -> DataFrame:
         volume_col="vol",
         order_col=order_key,
     )
-    q = ingest.write_stream_memory(agg, "stream_ohlcv", output_mode="complete")
-    q.awaitTermination()
-    return spark.table("stream_ohlcv").select(
+    return _run_stream(agg, "stream_ohlcv", "complete").select(
         F.unix_timestamp(F.col("win.start")).alias("bucket_start"),
         "event_type",
         "open",
@@ -1126,24 +1096,14 @@ def q_stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
     static customer dimension (broadcast — stateless, no watermark
     needed). Bounded input ⇒ equals the batch left join, which is the
     oracle."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NTZ→TIMESTAMP conversion (normalize_event_time) reads the session
-    # tz; pin it so a driver-built session in a non-UTC environment
-    # can't shift instants relative to the DuckDB oracle's epoch().
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
+    stream = _events_stream(spark, sf)
     dim = load_table(spark, sf, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment", "c_nationkey"
     )
     joined = ingest.enrich_stream(
         ingest.normalize_event_time(stream), dim, "user_id"
     ).select("event_id", "user_id", "event_type", "c_mktsegment", "c_nationkey")
-    q = ingest.write_stream_memory(joined, "stream_static_join")
-    q.awaitTermination()
-    return spark.table("stream_static_join")
+    return _run_stream(joined, "stream_static_join")
 
 
 def q_densify_fill(spark: SparkSession, sf: str) -> DataFrame:
@@ -1522,27 +1482,14 @@ def q_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     each event_id exactly once — output equals the single batch copy.
     At scale the watermarked form (dropDuplicatesWithinWatermark)
     bounds the state; bounded backfill here, so exact dedup."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NTZ→TIMESTAMP conversion (normalize_event_time) reads the session
-    # tz; pin it so a driver-built session in a non-UTC environment
-    # can't shift instants relative to the DuckDB oracle's epoch().
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    # single-FILE stream sources need a glob spelling (a bare file path
-    # fails FileStreamSource's "basePath must be a directory" check);
-    # two distinct spellings keep the sources independent.
-    s1 = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
-    s2 = ingest.read_stream(spark, f"{sf}/events.[p]arquet", raw_schema)
+    s1 = _events_stream(spark, sf)
+    # a second spelling of the same file is an independent source
+    s2 = ingest.read_stream(spark, f"{sf}/events.[p]arquet", s1.schema)
     deduped = ingest.dedup_stream(s1.unionByName(s2), ["event_id"])
-    q = ingest.write_stream_memory(
+    return _run_stream(
         deduped.select("event_id", "user_id", "event_type", "value"),
         "stream_dedup",
-        output_mode="append",
     )
-    q.awaitTermination()
-    return spark.table("stream_dedup")
 
 
 def q_udtf_sentences(spark: SparkSession, sf: str) -> DataFrame:
@@ -1647,16 +1594,9 @@ def q_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
     within the following 30 minutes, both sides unbounded streams with
     watermarks bounding the join state. Bounded backfill here, so the
     oracle is the equivalent batch interval join."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NTZ→TIMESTAMP conversion (normalize_event_time) reads the session
-    # tz; pin it so a driver-built session in a non-UTC environment
-    # can't shift instants relative to the DuckDB oracle's epoch().
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    s1 = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
-    s2 = ingest.read_stream(spark, f"{sf}/events.[p]arquet", raw_schema)
+    s1 = _events_stream(spark, sf)
+    # a second spelling of the same file is an independent source
+    s2 = ingest.read_stream(spark, f"{sf}/events.[p]arquet", s1.schema)
     views = (
         ingest.normalize_event_time(s1)
         .where(F.col("event_type") == "view")
@@ -1687,9 +1627,7 @@ def q_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
         F.unix_micros("ts").alias("view_ts_us"),
         F.unix_micros("r_ts").alias("purchase_ts_us"),
     )
-    q = ingest.write_stream_memory(out, "stream_stream_join")
-    q.awaitTermination()
-    return spark.table("stream_stream_join")
+    return _run_stream(out, "stream_stream_join")
 
 
 def q_quality_quarantine(spark: SparkSession, sf: str) -> DataFrame:
@@ -1795,15 +1733,7 @@ def q_stream_session_window(spark: SparkSession, sf: str) -> DataFrame:
     testdata carries sub-second timestamps) and the value sum goes
     through decimal(20,6) on both sides so the hash can't drift in the
     6th decimal."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NTZ→TIMESTAMP conversion (normalize_event_time) reads the session
-    # tz; pin it so a driver-built session in a non-UTC environment
-    # can't shift instants relative to the DuckDB oracle's epoch().
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
+    stream = _events_stream(spark, sf)
     ev = ingest.normalize_event_time(stream)
     agg = ingest.windowed_sessions(
         ingest.with_late_data_policy(ev, "ts", delay="1 hour"),
@@ -1817,11 +1747,7 @@ def q_stream_session_window(spark: SparkSession, sf: str) -> DataFrame:
             .alias("sum_value"),
         ],
     )
-    q = ingest.write_stream_memory(
-        agg, "stream_session_window", output_mode="complete"
-    )
-    q.awaitTermination()
-    return spark.table("stream_session_window").select(
+    return _run_stream(agg, "stream_session_window", "complete").select(
         "user_id",
         F.unix_micros(F.col("session.start")).alias("session_start_us"),
         F.unix_micros(F.col("session.end")).alias("session_end_us"),
@@ -2158,19 +2084,10 @@ def q_stream_anomaly(spark: SparkSession, sf: str) -> DataFrame:
     single-batch input ⇒ equals the batch anomaly window, so the
     streaming path is hash-checked against the same SQL oracle (with
     the zero-variance guard both sides implement)."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
+    stream = _events_stream(spark, sf)
     out = ingest.streaming_anomaly_zscore(stream)
-    q = ingest.write_stream_memory(
-        out, "stream_anomaly", output_mode="append"
-    )
-    q.awaitTermination()
     return (
-        spark.table("stream_anomaly")
+        _run_stream(out, "stream_anomaly")
         .where(F.col("is_anomaly"))
         .select("event_id", "user_id", "zscore")
     )
@@ -2566,19 +2483,10 @@ def q_stream_distinct_users(spark: SparkSession, sf: str) -> DataFrame:
     shape (watermarked dropDuplicates on (bucket, user), then a
     windowed count; streaming/ingest.windowed_distinct_users), checked
     against the batch count(DISTINCT) oracle."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
+    stream = _events_stream(spark, sf)
     ev = ingest.normalize_event_time(stream)
     agg = ingest.windowed_distinct_users(ev)
-    q = ingest.write_stream_memory(
-        agg, "stream_distinct_users", output_mode="complete"
-    )
-    q.awaitTermination()
-    return spark.table("stream_distinct_users").select(
+    return _run_stream(agg, "stream_distinct_users", "complete").select(
         F.date_format(F.col("win.start"), "yyyy-MM-dd HH:mm:ss").alias(
             "bucket_ts"
         ),
@@ -2828,17 +2736,10 @@ def q_stream_cusum(spark: SparkSession, sf: str) -> DataFrame:
     (streaming/ingest.streaming_cusum, applyInPandasWithState with an
     O(1)-per-key accumulator): bounded single-batch input equals the
     batch recursion, so the same recursive-CTE oracle checks it."""
-    from quanta_etl_spark.streaming import ingest
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
-    stream = ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
+    stream = _events_stream(spark, sf)
     ev = ingest.normalize_event_time(stream)
     out = ingest.streaming_cusum(ev)
-    q = ingest.write_stream_memory(out, "stream_cusum", output_mode="append")
-    q.awaitTermination()
-    return spark.table("stream_cusum").select(
+    return _run_stream(out, "stream_cusum").select(
         "event_id", "user_id", "cusum", "alarm"
     )
 

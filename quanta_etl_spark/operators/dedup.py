@@ -42,6 +42,7 @@ from quanta_etl_spark.functions.text import (
     ws_tokens,
 )
 from quanta_etl_spark.functions.vectors import cosine_similarity
+from quanta_etl_spark.operators.util import group_complete_slices
 from quanta_etl_spark.operators.util import spread as _spread
 
 # 31-bit Mersenne prime: (a*h + b) mod P stays within signed-64 range
@@ -237,24 +238,6 @@ def _band_explode(
     ).select(*cols, "__band.band", "__band.bhash")
 
 
-def _banded_pairs(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """Band a signature table and self-join on (band, band_hash).
-    Output: (id_a, id_b) with id_a < id_b, NOT deduped — a pair
-    colliding in k bands appears k times."""
-    banded = _band_explode(sigs, num_hashes, bands)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bhash") == F.col("r.bhash"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
-        .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
-    )
-
-
 def _bucket_pair_indices(
     starts: "np.ndarray",
     sizes: "np.ndarray",
@@ -387,12 +370,14 @@ def _fused_likely_pairs(
     carries the bucket identity; uniform by construction, no skew).
 
     stage 2 (reduce): contiguous bucket runs → vectorized cross-bucket
-    pair generation with the >= min_agree estimate prefilter (see
-    _bucket_likely_pairs for the algorithm; this variant parses the
-    signature matrix with one zero-copy frombuffer per batch instead of
-    per-row list conversion), then EMIT-ONCE banding: a triangle pair
-    is emitted only at its FIRST fully-slice-equal band (any later
-    band's bucket provably regenerates it), cutting the measured ~16×
+    pair generation with the >= min_agree estimate prefilter — for
+    each distinct bucket size, all buckets of that size emit their
+    upper-triangle index pairs in one numpy op, and one batched compare
+    of the signature matrix (parsed with one zero-copy frombuffer per
+    batch) keeps pairs with >= ``min_agree`` matching positions — then
+    EMIT-ONCE banding: a triangle pair is emitted only at its FIRST
+    fully-slice-equal band (any later band's bucket provably
+    regenerates it), cutting the measured ~16×
     per-pair output repetition on near-identical corpora to 1 while
     keeping the distinct candidate set byte-identical.
 
@@ -459,8 +444,6 @@ def _fused_likely_pairs(
             )
 
     def gen_pairs(batches):
-        carry: pd.DataFrame | None = None
-
         def emit(pdf: pd.DataFrame):
             bh = pdf["bhash"].values
             n = len(pdf)
@@ -503,24 +486,8 @@ def _fused_likely_pairs(
                 a, b = np.where(sw, b, a), np.where(sw, a, b)
             return pd.DataFrame({"id_a": a, "id_b": b})
 
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            bh = pdf["bhash"].values
-            last = bh == bh[-1]
-            if last.all():
-                carry = pdf
-                continue
-            cut = len(pdf) - int(np.argmin(last[::-1]))
-            carry = pdf.iloc[cut:].reset_index(drop=True)
-            out = emit(pdf.iloc[:cut])
-            if out is not None:
-                yield out
-        if carry is not None and len(carry):
-            out = emit(carry)
+        for pdf in group_complete_slices(batches, "bhash"):
+            out = emit(pdf)
             if out is not None:
                 yield out
 
@@ -533,124 +500,6 @@ def _fused_likely_pairs(
         .sortWithinPartitions("bhash", "__id")
         .mapInPandas(gen_pairs, f"id_a {id_dt}, id_b {id_dt}")
     )
-
-
-def _bucket_likely_pairs(
-    sigs: DataFrame,
-    id_type,
-    num_hashes: int,
-    bands: int,
-    min_agree: int,
-    max_bucket: int = 4096,
-) -> DataFrame:
-    """Likely near-dup pairs straight from the LSH buckets.
-
-    One repartition on the bucket key, a within-partition sort, then a
-    single ``mapInPandas`` pass: buckets arrive as contiguous runs, and
-    pair generation is vectorized ACROSS buckets — for each distinct
-    bucket size, all buckets of that size emit their upper-triangle
-    index pairs in one numpy op, and one batched byte-compare keeps
-    pairs with >= ``min_agree`` matching signature positions. No
-    per-bucket Python loop, no collect_list structs through Arrow;
-    collision pairs never materialize as Spark rows — only survivors
-    do. The quadratic in-bucket compare is inherent to LSH collisions
-    (same as the self-join shape); rows inside a bucket are id-sorted
-    by the partition sort, so id_a < id_b by construction. Output may
-    repeat a pair (one row per shared bucket)."""
-    id_dt = id_type.simpleString()
-
-    def process(batches):
-        carry: pd.DataFrame | None = None
-
-        def emit(pdf: pd.DataFrame):
-            band = pdf["band"].values
-            bh = pdf["bhash"].values
-            n = len(pdf)
-            change = np.empty(n, dtype=bool)
-            change[0] = True
-            change[1:] = (band[1:] != band[:-1]) | (bh[1:] != bh[:-1])
-            starts = np.flatnonzero(change)
-            sizes = np.diff(np.append(starts, n))
-            multi = sizes >= 2
-            if not multi.any():
-                return None
-            ids = pdf["__id"].values
-            sig_mat = np.vstack(pdf["__sig"].values).astype(np.int32)
-            gi, gj, _span = _bucket_pair_indices(
-                starts, sizes, max_bucket, sig_mat
-            )
-            if not len(gi):
-                return None
-            agree = (sig_mat[gi] == sig_mat[gj]).sum(axis=1)
-            keep = agree >= min_agree
-            if not keep.any():
-                return None
-            ia, ib = gi[keep], gj[keep]
-            a, b = ids[ia], ids[ib]
-            sw = a > b  # hot-run pairs follow signature order, not id order
-            if sw.any():
-                a, b = np.where(sw, b, a), np.where(sw, a, b)
-            return pd.DataFrame({"id_a": a, "id_b": b})
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            # The trailing bucket may continue in the next Arrow batch —
-            # hold it back (rows are bucket-sorted, so it is a suffix).
-            band = pdf["band"].values
-            bh = pdf["bhash"].values
-            last = (band == band[-1]) & (bh == bh[-1])
-            if last.all():
-                carry = pdf
-                continue
-            cut = len(pdf) - int(np.argmin(last[::-1]))
-            carry = pdf.iloc[cut:].reset_index(drop=True)
-            out = emit(pdf.iloc[:cut])
-            if out is not None:
-                yield out
-        if carry is not None and len(carry):
-            out = emit(carry)
-            if out is not None:
-                yield out
-
-    banded = _band_explode(sigs, num_hashes, bands, keep_sig=True)
-    return (
-        banded.repartition(F.col("band"), F.col("bhash"))
-        .sortWithinPartitions("band", "bhash", "__id")
-        .mapInPandas(process, f"id_a {id_dt}, id_b {id_dt}")
-    )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 5,
-    use_arrow: bool = True,
-    distinct: bool = True,
-) -> DataFrame:
-    """LSH candidate pairs: slice the signature into ``bands`` bands of
-    r = num_hashes/bands rows, hash each band, and self-join on
-    (band_index, band_hash). Output: (id_a, id_b) with id_a < id_b,
-    distinct. Probability a pair with Jaccard s becomes a candidate:
-    1 - (1 - s^r)^b — the classic S-curve (MMDS ch.3).
-
-    Scale: the join keys are uniform 64-bit hashes → no skew; each
-    band bucket holds only genuinely-colliding docs.
-    """
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    sigs = _minhash_sigs(df, id_col, text_col, num_hashes, shingle_k, use_arrow)
-    pairs = _banded_pairs(sigs, num_hashes, bands)
-    # distinct=False lets a caller that filters candidates anyway (see
-    # minhash_dedup_pairs) defer the dedup shuffle to the far smaller
-    # post-filter set; a pair colliding in k bands appears k times.
-    return pairs.dropDuplicates() if distinct else pairs
 
 
 def _collapsed_dedup_pairs(

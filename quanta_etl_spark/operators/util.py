@@ -94,3 +94,33 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def group_complete_slices(batches, key: str):
+    """Re-cut a stream of pandas batches sorted by ``key`` on group
+    boundaries, for a ``mapInPandas`` kernel that must see every group
+    whole: a group spanning Arrow batches is carried into the next
+    batch (memory bound: one group + one batch, the bound applyInPandas
+    carries), and each yielded slice holds complete groups only. NULL
+    keys form one group. The caller keeps its own ``repartition`` +
+    ``sortWithinPartitions`` on ``key`` — this only moves the cuts."""
+    import numpy as np
+    import pandas as pd
+
+    carry: pd.DataFrame | None = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+            carry = None
+        if not len(pdf):
+            continue
+        kv = pdf[key].values
+        last = pd.isna(kv) if pd.isna(kv[-1]) else kv == kv[-1]
+        if last.all():
+            carry = pdf
+            continue
+        cut = len(pdf) - int(np.argmin(last[::-1]))
+        carry = pdf.iloc[cut:].reset_index(drop=True)
+        yield pdf.iloc[:cut].reset_index(drop=True)
+    if carry is not None and len(carry):
+        yield carry

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from quanta_etl_spark.operators.util import group_complete_slices
+
 
 def _order_cols(order_by: Sequence[str | Column]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_by]
@@ -55,35 +57,11 @@ def _grouped_sorted_map(
     previous per-group ``pandas.sort_values`` did with NaN order keys,
     so results are unchanged for every input the old shape accepted.
     """
-    import numpy as np
-    import pandas as pd
-
     projected = df.select(*cols)
 
     def run(batches):
-        carry: pd.DataFrame | None = None
-
-        def _same_key(kv: "np.ndarray") -> "np.ndarray":
-            last = kv[-1]
-            if pd.isna(last):
-                return pd.isna(kv)
-            return kv == last
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            last = _same_key(pdf[key].values)
-            if last.all():
-                carry = pdf
-                continue
-            cut = len(pdf) - int(np.argmin(last[::-1]))
-            carry = pdf.iloc[cut:].reset_index(drop=True)
-            yield kernel(pdf.iloc[:cut].reset_index(drop=True))
-        if carry is not None and len(carry):
-            yield kernel(carry)
+        for pdf in group_complete_slices(batches, key):
+            yield kernel(pdf)
 
     return (
         projected.repartition(F.col(key))
@@ -617,7 +595,7 @@ def anomaly_zscore(
     sd = F.stddev_samp(value_col).over(w)
     # sd > 0 guard: a zero-variance baseline yields 0/0 = NaN (which
     # Spark ORDERS above every number, so abs(z) > t would flag it) or
-    # ±Inf — not NULL. Mirror the streaming twin (_zscore_fn) exactly:
+    # ±Inf — not NULL. Mirror the streaming twin (_zscore_step) exactly:
     # no flag without a positive-variance baseline.
     z = F.when(sd > 0, (F.col(value_col) - mu) / sd)
     return df.withColumn("zscore", z).withColumn(

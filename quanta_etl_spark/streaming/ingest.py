@@ -146,8 +146,64 @@ def windowed_sessions(
 
 
 # ---------------------------------------------------------------------------
-# Custom stateful operator: running last observation per key
+# Custom stateful operators: one per-key state scan
 # ---------------------------------------------------------------------------
+
+
+def _keyed_state_scan(
+    df: DataFrame,
+    key: str,
+    order: Sequence[str],
+    step,
+    state_schema: str,
+    output_schema: str,
+) -> DataFrame:
+    """The per-key scan behind every ``applyInPandasWithState``
+    operator here: read the key's carried state, concatenate ALL of the
+    group's Arrow chunks, sort them once by ``order`` (stable), and run
+    ``step(key, pdf, carried) -> (out, new_state)`` — the operator's
+    recurrence alone. ``carried`` is None for a key seen for the first
+    time; a ``new_state`` of None leaves the state unset.
+
+    A large group arrives as MULTIPLE Arrow chunks in arbitrary
+    cross-chunk order (``spark.sql.execution.arrow.maxRecordsPerBatch``,
+    default 10k rows), so sorting chunk by chunk attaches the recurrence
+    to the wrong rows whenever a group spans chunks (ADVICE r2). Within
+    a micro-batch rows are therefore in ``order``, so on bounded
+    single-batch input each operator equals its batch window twin —
+    which is what the SQL oracles check; across micro-batches the order
+    follows arrival (the usual event-time caveat).
+
+    Memory note: this buffers one (key × micro-batch) group in the
+    Python worker — the same bound applyInPandas carries. State across
+    batches stays bounded per key; a skewed key is handled by smaller
+    micro-batches, not more state."""
+    order = list(order)
+
+    def scan(
+        key_vals: tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterable[pd.DataFrame]:
+        chunks = list(pdf_iter)
+        if not chunks:  # timeout-only invocation: keep state as-is
+            return
+        pdf = pd.concat(chunks, ignore_index=True).sort_values(
+            order, kind="mergesort", ignore_index=True
+        )
+        out, new_state = step(
+            key_vals, pdf, state.get if state.exists else None
+        )
+        if new_state is not None:
+            state.update(new_state)
+        yield out
+
+    return df.groupBy(key).applyInPandasWithState(
+        scan,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
 
 _LAST_PRICE_STATE = "last_price double, last_ts timestamp"
 _LAST_PRICE_OUTPUT = (
@@ -155,44 +211,37 @@ _LAST_PRICE_OUTPUT = (
 )
 
 
-def _last_price_fn(
-    key: tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    """Forward-fill across micro-batches: remember each key's last
-    (price, ts) in GroupState; null prices inherit it."""
+def _last_price_step(key: tuple, pdf: pd.DataFrame, carried):
+    """Forward-fill: null prices inherit the key's last (price, ts)."""
     (isin,) = key
-    last_price, last_ts = state.get if state.exists else (None, None)
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values("trading_ts")
-        filled = []
-        for price, ts in zip(pdf["end_price"], pdf["trading_ts"]):
-            if pd.notna(price):
-                last_price, last_ts = float(price), ts
-                filled.append(float(price))
-            else:
-                filled.append(last_price)
-        yield pd.DataFrame(
-            {
-                "isin": isin,
-                "trading_ts": pdf["trading_ts"],
-                "end_price": pdf["end_price"],
-                "filled_price": filled,
-            }
-        )
-    if last_price is not None:
-        state.update((last_price, pd.Timestamp(last_ts).to_pydatetime()))
+    last_price, last_ts = carried or (None, None)
+    filled = []
+    for price, ts in zip(pdf["end_price"], pdf["trading_ts"]):
+        if pd.notna(price):
+            last_price, last_ts = float(price), ts
+            filled.append(float(price))
+        else:
+            filled.append(last_price)
+    out = pd.DataFrame(
+        {
+            "isin": isin,
+            "trading_ts": pdf["trading_ts"],
+            "end_price": pdf["end_price"],
+            "filled_price": filled,
+        }
+    )
+    if last_price is None:
+        return out, None
+    return out, (last_price, pd.Timestamp(last_ts).to_pydatetime())
 
 
 def running_forward_fill(df: DataFrame, key: str = "isin") -> DataFrame:
     """Stateful streaming forward-fill (B1 on an unbounded stream):
     ``applyInPandasWithState`` keeps one (price, ts) pair per key —
     O(keys) state, no watermark needed for correctness."""
-    return df.groupBy(key).applyInPandasWithState(
-        _last_price_fn,
-        outputStructType=_LAST_PRICE_OUTPUT,
-        stateStructType=_LAST_PRICE_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state_scan(
+        df, key, ["trading_ts"], _last_price_step,
+        _LAST_PRICE_STATE, _LAST_PRICE_OUTPUT,
     )
 
 
@@ -200,41 +249,19 @@ _RUN_STATS_STATE = "n bigint, mx double"
 _RUN_STATS_OUTPUT = "user_id bigint, event_id bigint, run_n bigint, run_max double"
 
 
-def _running_stats_fn(
-    key: tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    """Running per-key count and max across micro-batches. A large
-    group arrives as MULTIPLE Arrow chunks in arbitrary cross-chunk
-    order (default ~10k rows each), so all chunks for the key are
-    concatenated and sorted ONCE by (ts, event_id) before the running
-    stats are computed (ADVICE r2: per-chunk sorting attached run_n/
-    run_max to the wrong event_ids whenever a group spanned chunks).
-    Within a batch rows are then in (ts, event_id) order, so on bounded
-    single-batch input the output is EXACTLY the batch cumulative
-    window — which is what the SQL oracle checks.
-
-    Memory note: this buffers one (key × micro-batch) group in the
-    Python worker — the same bound applyInPandas carries. State across
-    batches stays O(1) per key (two scalars); a skewed key is handled
-    by smaller micro-batches, not more state."""
+def _running_stats_step(key: tuple, pdf: pd.DataFrame, carried):
+    """Running per-key count and max, seeded from the carried pair."""
     import numpy as np
 
     (uid,) = key
-    n, mx = state.get if state.exists else (0, None)
-    chunks = list(pdf_iter)
-    if not chunks:  # timeout-only invocation: no data, keep state as-is
-        state.update((int(n), mx))
-        return
-    pdf = (
-        pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
-    ).sort_values(["ts", "event_id"])
+    n, mx = carried or (0, None)
     vals = pdf["value"].astype(float).to_numpy()
     seed = -np.inf if mx is None else mx
     run_max = np.maximum.accumulate(np.concatenate(([seed], vals)))[1:]
     run_n = n + np.arange(1, len(vals) + 1, dtype="int64")
     n += len(vals)
     mx = float(run_max[-1]) if len(vals) else mx
-    yield pd.DataFrame(
+    out = pd.DataFrame(
         {
             "user_id": uid,
             "event_id": pdf["event_id"].to_numpy(),
@@ -242,7 +269,7 @@ def _running_stats_fn(
             "run_max": run_max,
         }
     )
-    state.update((int(n), mx))
+    return out, (int(n), mx)
 
 
 def running_event_stats(df: DataFrame) -> DataFrame:
@@ -253,14 +280,10 @@ def running_event_stats(df: DataFrame) -> DataFrame:
     cumulative window, so it is fully oracle-checkable; on a live
     stream, cross-batch ordering follows arrival order (document the
     usual event-time caveat)."""
-    return df.select("user_id", "event_id", "ts", "value").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _running_stats_fn,
-        outputStructType=_RUN_STATS_OUTPUT,
-        stateStructType=_RUN_STATS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state_scan(
+        df.select("user_id", "event_id", "ts", "value"),
+        "user_id", ["ts", "event_id"], _running_stats_step,
+        _RUN_STATS_STATE, _RUN_STATS_OUTPUT,
     )
 
 
@@ -639,15 +662,10 @@ _ZSCORE_WINDOW = 20
 _ZSCORE_THRESHOLD = 2.5
 
 
-def _zscore_fn(
-    key: tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
+def _zscore_step(key: tuple, pdf: pd.DataFrame, carried):
     """Streaming rolling z-score: state = the key's last W values (a
-    bounded array — O(W) per key, no unbounded growth). Chunks are
-    concatenated and sorted once by (ts, event_id) before scoring
-    (cross-chunk order is arbitrary — same lesson as
-    _running_stats_fn). A zero-variance window is unflaggable (z
-    null), mirrored exactly in the SQL oracle.
+    bounded array — O(W) per key, no unbounded growth). A zero-variance
+    window is unflaggable (z null), mirrored exactly in the SQL oracle.
 
     On bounded single-batch input this equals the batch
     anomaly_zscore window (trailing W rows, current row excluded);
@@ -656,12 +674,7 @@ def _zscore_fn(
     import numpy as np
 
     (uid,) = key
-    buf: list[float] = list(state.get[0]) if state.exists else []
-    chunks = list(pdf_iter)
-    if not chunks:
-        state.update((buf,))
-        return
-    pdf = pd.concat(chunks).sort_values(["ts", "event_id"], kind="mergesort")
+    buf: list[float] = list(carried[0]) if carried else []
     zs: list[float | None] = []
     flags: list[bool] = []
     for v in pdf["value"].astype(float):
@@ -676,8 +689,7 @@ def _zscore_fn(
         buf.append(float(v))
         if len(buf) > _ZSCORE_WINDOW:
             buf = buf[-_ZSCORE_WINDOW:]
-    state.update((buf,))
-    yield pd.DataFrame(
+    out = pd.DataFrame(
         {
             "user_id": uid,
             "event_id": pdf["event_id"].values,
@@ -685,6 +697,7 @@ def _zscore_fn(
             "is_anomaly": flags,
         }
     )
+    return out, (buf,)
 
 
 def streaming_anomaly_zscore(df: DataFrame) -> DataFrame:
@@ -693,14 +706,10 @@ def streaming_anomaly_zscore(df: DataFrame) -> DataFrame:
     carried across micro-batches in O(W)-per-key state via
     ``applyInPandasWithState``. Emits every scored row; filter
     ``is_anomaly`` downstream for the alert stream."""
-    return df.select("user_id", "event_id", "ts", "value").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _zscore_fn,
-        outputStructType=_ZSCORE_OUTPUT,
-        stateStructType=_ZSCORE_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state_scan(
+        df.select("user_id", "event_id", "ts", "value"),
+        "user_id", ["ts", "event_id"], _zscore_step,
+        _ZSCORE_STATE, _ZSCORE_OUTPUT,
     )
 
 
@@ -829,32 +838,22 @@ _CUSUM_SLACK = 10.0
 _CUSUM_THRESHOLD = 120.0
 
 
-def _cusum_fn(
-    key: tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
+def _cusum_step(key: tuple, pdf: pd.DataFrame, carried):
     """Streaming CUSUM: state = one double (the running clamped sum) —
-    the cheapest stateful detector there is. Chunks are concatenated
-    and sorted by (ts, event_id) before the recursion (cross-chunk
-    order is arbitrary); the per-key accumulator carries across
-    micro-batches, so a drift that started three batches ago keeps
-    accumulating. Identical arithmetic to the batch
+    the cheapest stateful detector there is. The per-key accumulator
+    carries across micro-batches, so a drift that started three
+    batches ago keeps accumulating. Identical arithmetic to the batch
     ``windows.cusum`` — bounded single-batch input reproduces it
     bit-for-bit."""
     (uid,) = key
-    acc: float = float(state.get[0]) if state.exists else 0.0
-    chunks = list(pdf_iter)
-    if not chunks:
-        state.update((acc,))
-        return
-    pdf = pd.concat(chunks).sort_values(["ts", "event_id"], kind="mergesort")
+    acc: float = float(carried[0]) if carried else 0.0
     sums: list[float] = []
     alarms: list[bool] = []
     for v in pdf["value"].astype(float):
         acc = max(0.0, acc + (v - _CUSUM_TARGET - _CUSUM_SLACK))
         sums.append(acc)
         alarms.append(acc > _CUSUM_THRESHOLD)
-    state.update((acc,))
-    yield pd.DataFrame(
+    out = pd.DataFrame(
         {
             "user_id": uid,
             "event_id": pdf["event_id"].values,
@@ -862,6 +861,7 @@ def _cusum_fn(
             "alarm": alarms,
         }
     )
+    return out, (acc,)
 
 
 def streaming_cusum(df: DataFrame) -> DataFrame:
@@ -869,12 +869,8 @@ def streaming_cusum(df: DataFrame) -> DataFrame:
     threshold 120 — the gated parameterization): per-user one-sided
     CUSUM drift scores carried across micro-batches in O(1)-per-key
     state via ``applyInPandasWithState``."""
-    return df.select("user_id", "event_id", "ts", "value").groupBy(
-        "user_id"
-    ).applyInPandasWithState(
-        _cusum_fn,
-        outputStructType=_CUSUM_OUTPUT,
-        stateStructType=_CUSUM_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_state_scan(
+        df.select("user_id", "event_id", "ts", "value"),
+        "user_id", ["ts", "event_id"], _cusum_step,
+        _CUSUM_STATE, _CUSUM_OUTPUT,
     )

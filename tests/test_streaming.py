@@ -988,3 +988,118 @@ class TestStreamShufflePartitionSizing:
         assert ops and all(
             op["numShufflePartitions"] == 2 for op in ops
         ), ops
+
+
+_T0 = dt.datetime(2020, 11, 24, 9, 0)
+
+# Quotes with silent minutes between them: the forward-filled price must
+# never come from a LATER quote.
+_CHUNK_BARS = [
+    ("DE0001", _T0 + dt.timedelta(minutes=m), p)
+    for m, p in [(0, 100.0), (1, None), (2, None), (3, None), (4, None),
+                 (5, 105.0), (6, None)]
+] + [
+    ("DE0002", _T0 + dt.timedelta(minutes=m), p)
+    for m, p in [(0, None), (1, 7.0), (2, None), (3, 6.5), (4, None)]
+]
+_CHUNK_BAR_SCHEMA = "isin string, trading_ts timestamp, end_price double"
+
+# Non-monotone values so running max, z-score and CUSUM all depend on
+# row order; user 1 drifts far enough above target to raise alarms.
+_CHUNK_EVENTS = [
+    (uid, uid * 100 + i, _T0 + dt.timedelta(seconds=i), v)
+    for uid, vals in [
+        (1, [70.0, 95.0, 40.0, 130.0, 55.0, 120.0, 20.0, 150.0]),
+        (2, [10.0, 12.0, 11.0, 90.0, 9.0, 13.0, 12.0]),
+    ]
+    for i, v in enumerate(vals)
+]
+_CHUNK_EVENT_SCHEMA = "user_id bigint, event_id bigint, ts timestamp, value double"
+
+_PER_KEY_STATE_OPS = {
+    "running_forward_fill": (
+        ingest.running_forward_fill, _CHUNK_BARS, _CHUNK_BAR_SCHEMA
+    ),
+    "running_event_stats": (
+        ingest.running_event_stats, _CHUNK_EVENTS, _CHUNK_EVENT_SCHEMA
+    ),
+    "streaming_anomaly_zscore": (
+        ingest.streaming_anomaly_zscore, _CHUNK_EVENTS, _CHUNK_EVENT_SCHEMA
+    ),
+    "streaming_cusum": (
+        ingest.streaming_cusum, _CHUNK_EVENTS, _CHUNK_EVENT_SCHEMA
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PER_KEY_STATE_OPS))
+def test_per_key_state_scan_sorts_across_arrow_chunks(spark, tmp_path, op):
+    """A key's rows reach the stateful kernel as several Arrow chunks
+    in arrival order. Written in descending time order and cut into
+    2-row chunks, every per-key stream operator must give exactly the
+    output it gives on ascending input in one chunk: the scan sorts
+    the concatenated group once, never chunk by chunk (a per-chunk
+    sort made the forward fill carry a later quote backwards)."""
+    build, rows, schema = _PER_KEY_STATE_OPS[op]
+
+    def run(tag, ordered):
+        src = str(tmp_path / tag)
+        spark.createDataFrame(ordered, schema).coalesce(1).write.parquet(src)
+        stream = ingest.read_stream(spark, src, spark.read.parquet(src).schema)
+        out = _run_to_memory(spark, build(stream), f"chunks_{op}_{tag}")
+        return sorted(out.collect(), key=str)
+
+    # the timestamp is the second-to-last field of both row shapes
+    expected = run("asc", sorted(rows, key=lambda r: r[-2]))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    try:
+        got = run("desc", sorted(rows, key=lambda r: r[-2], reverse=True))
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert len(expected) == len(rows)
+    assert got == expected
+
+
+def _stream_query_names() -> list[str]:
+    import __spark_entry__ as E
+
+    return sorted(n for n in E.queries() if n.startswith("stream_"))
+
+
+@pytest.fixture(scope="module")
+def duck_oracle(sf_dir):
+    """DuckDB views over every sf_dir table, as the oracle gate builds them."""
+    import os
+
+    import duckdb
+
+    con = duckdb.connect()
+    for f in sorted(os.listdir(sf_dir)):
+        if f.endswith(".parquet"):
+            con.sql(
+                f"CREATE VIEW {f.removesuffix('.parquet')} AS SELECT * "
+                f"FROM read_parquet('{sf_dir}/{f}')"
+            )
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", _stream_query_names())
+def test_stream_query_matches_duckdb_oracle(spark, sf_dir, duck_oracle, name):
+    """Every bounded stream query hash-matches its DuckDB oracle at
+    sf0.001 (the canonical hash of tools/check_oracle.py)."""
+    import __spark_entry__ as E
+    from tools.check_oracle import canonicalize, duckdb_result, spark_result
+
+    s_rows, s_cols = spark_result(E.queries()[name](spark, sf_dir))
+    d_rows, d_cols, _ = duckdb_result(duck_oracle, E.oracle_sql()[name])
+    assert sorted(s_cols) == sorted(d_cols)
+    s_hash, s_n = canonicalize(s_rows, s_cols)
+    d_hash, d_n = canonicalize(d_rows, d_cols)
+    assert s_n > 0
+    assert (s_hash, s_n) == (d_hash, d_n)
