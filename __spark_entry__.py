@@ -10,6 +10,7 @@ engines produce bit-identical values regardless of accumulation order.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Callable
 
@@ -44,6 +45,7 @@ from quanta_etl_spark.operators import reshape as reshape_ops
 from quanta_etl_spark.operators import sampling as samp_ops
 from quanta_etl_spark.operators import text_stats as ts_ops
 from quanta_etl_spark.operators import windows as win_ops
+from quanta_etl_spark.operators.util import scoped_conf
 from quanta_etl_spark.sources.testdata import load_table
 from quanta_etl_spark.streaming import ingest
 
@@ -78,15 +80,35 @@ def _dsum2(c: str | F.Column) -> F.Column:
     return F.round(F.sum(_dec(c)), 2).cast("double")
 
 
+# Every q_stream_* query runs under these pins: the legacy reader for
+# pandas-written ns timestamps, and UTC for normalize_event_time's
+# NTZ->TIMESTAMP cast, so a driver-built session in a non-UTC
+# environment can't shift instants relative to the DuckDB oracle's
+# epoch().
+_STREAM_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
+def _stream_query(fn: QueryFn) -> QueryFn:
+    """Build and run a ``q_stream_*`` query under :data:`_STREAM_CONFS`,
+    restoring the caller's values once its bounded stream has run. The
+    returned frame keeps UTC: Spark fixes an expression's time zone
+    when the frame is analysed, which happens inside the scope."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf: str) -> DataFrame:
+        with scoped_conf(spark, _STREAM_CONFS):
+            return fn(spark, sf)
+
+    return run
+
+
 def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
     """The events table as a bounded file stream with its batch schema.
     A single-FILE stream source needs a glob spelling (a bare file path
     fails FileStreamSource's "basePath must be a directory" check)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NTZ→TIMESTAMP conversion (normalize_event_time) reads the session
-    # tz; pin it so a driver-built session in a non-UTC environment
-    # can't shift instants relative to the DuckDB oracle's epoch().
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
     return ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
 
@@ -650,6 +672,7 @@ def q_date_parts_functions(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@_stream_query
 def q_stream_sliding_window(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming SLIDING window aggregation (1h window / 30min slide —
     each event lands in 2 overlapping windows). Bucket starts are
@@ -701,6 +724,7 @@ def q_text_cleanup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@_stream_query
 def q_stream_stateful_running(spark: SparkSession, sf: str) -> DataFrame:
     """Custom STATEFUL streaming operator end-to-end
     (applyInPandasWithState): per-user running count/max across
@@ -712,6 +736,7 @@ def q_stream_stateful_running(spark: SparkSession, sf: str) -> DataFrame:
     return _run_stream(out, "stream_stateful_running")
 
 
+@_stream_query
 def q_stream_forward_fill(spark: SparkSession, sf: str) -> DataFrame:
     """Stateful streaming forward-fill end-to-end
     (streaming/ingest.running_forward_fill, applyInPandasWithState):
@@ -1029,6 +1054,7 @@ def q_join_salted(spark: SparkSession, sf: str) -> DataFrame:
     return out.select("o_orderkey", "custkey", "o_totalprice", "c_mktsegment")
 
 
+@_stream_query
 def q_stream_hourly_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Structured Streaming end-to-end (readStream → watermark →
     event-time windowed agg → memory sink, availableNow): hourly
@@ -1055,6 +1081,7 @@ def q_stream_hourly_stats(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@_stream_query
 def q_stream_ohlcv(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming OHLCV bars over the events stream (the B5 resample's
     streaming twin, windowed_ohlcv): hourly open/high/low/close of
@@ -1091,6 +1118,7 @@ def q_stream_ohlcv(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@_stream_query
 def q_stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
     """Stream-static enrichment: the events stream left-joined to the
     static customer dimension (broadcast — stateless, no watermark
@@ -1476,6 +1504,7 @@ def q_text_repetition(spark: SparkSession, sf: str) -> DataFrame:
     return ts_ops.repetition_stats(docs, "doc_id", "text")
 
 
+@_stream_query
 def q_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming deduplication: the events file is ingested TWICE (two
     unioned streams of the same source) and dropDuplicates state emits
@@ -1589,6 +1618,7 @@ def q_media_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@_stream_query
 def q_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
     """Stream-stream interval join: views joined to same-user purchases
     within the following 30 minutes, both sides unbounded streams with
@@ -1726,6 +1756,7 @@ def q_corpus_quality_filter(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@_stream_query
 def q_stream_session_window(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming SESSION windows: per-user sessions close after 30min
     of inactivity; session_window merges intervals engine-side with
@@ -2076,6 +2107,7 @@ def q_dedup_survivor(spark: SparkSession, sf: str) -> DataFrame:
     return out.select("doc_id", "fp", "cluster_size")
 
 
+@_stream_query
 def q_stream_anomaly(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming rolling z-score anomaly alerts end-to-end
     (streaming/ingest.streaming_anomaly_zscore,
@@ -2477,6 +2509,7 @@ def q_market_share(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+@_stream_query
 def q_stream_distinct_users(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming distinct-user counts per hour — count_distinct is
     unsupported on streams, so this gates the documented two-stage
@@ -2731,6 +2764,7 @@ def q_weighted_sample(spark: SparkSession, sf: str) -> DataFrame:
     return out.select("o_orderkey", "o_totalprice", "sample_key")
 
 
+@_stream_query
 def q_stream_cusum(spark: SparkSession, sf: str) -> DataFrame:
     """Streaming CUSUM drift scores end-to-end
     (streaming/ingest.streaming_cusum, applyInPandasWithState with an

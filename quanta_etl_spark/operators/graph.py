@@ -322,90 +322,127 @@ def apply_dedup(
     return corpus.join(losers, id_col, "left_anti")
 
 
+def _pagerank_single_task(
+    e: DataFrame, iterations: int, damping: float
+) -> DataFrame:
+    """All ``iterations`` rounds of ``pagerank`` in ONE executor task —
+    the small-graph path, with the distributed rounds' arithmetic to
+    the bit. Spark casts each contribution rank/out_deg (a double) to
+    decimal(38,18) HALF_UP from its shortest repr; the kernel does the
+    same once per source node, sums the scaled int64s exactly with
+    ``np.add.at`` (ranks are <= 1, so no per-node sum overflows) and
+    converts back with one correctly rounded division, as Spark's
+    decimal->double cast does. A NULL id follows the equi-joins: it
+    counts in N and keeps (1-d)/N, sending and receiving nothing, and a
+    NULL dst still counts in its source's out-degree.
+
+    Arrow in, Arrow out (``mapInArrow``): pandas would turn a bigint id
+    column holding a NULL into float64. The closure imports nothing
+    from this package, so a worker without it installed can run it."""
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    node_t = e.select("src").union(e.select("dst")).schema[0].dataType
+    out_schema = StructType(
+        [StructField("node", node_t), StructField("rank", DoubleType())]
+    )
+
+    def part(batches):
+        from decimal import ROUND_HALF_UP, Decimal
+
+        import numpy as np
+        import pyarrow as pa
+
+        batches = list(batches)
+        m = sum(b.num_rows for b in batches)
+        if m == 0:
+            return
+        ids = pa.concat_arrays(
+            [b.column(0) for b in batches] + [b.column(1) for b in batches]
+        ).dictionary_encode()
+        nodes = ids.dictionary
+        if ids.indices.null_count:  # the NULL id is one more node, index k
+            nodes = pa.concat_arrays([nodes, pa.nulls(1, nodes.type)])
+        k = len(ids.dictionary)
+        idx = ids.indices.fill_null(k).to_numpy()
+        s, d = idx[:m], idx[m:]
+        deg = np.bincount(s[s < k], minlength=len(nodes))
+        live = (s < k) & (d < k)
+        s, d = s[live], d[live]
+        senders = np.flatnonzero(deg)
+        n = float(len(nodes))
+        rank = np.full(len(nodes), 1.0 / n)
+        for _ in range(iterations):
+            c, inv = np.unique(rank[senders] / deg[senders], return_inverse=True)
+            q = np.zeros(len(nodes), np.int64)
+            q[senders] = np.array(
+                [
+                    int(Decimal(repr(x)).scaleb(18).to_integral_value(ROUND_HALF_UP))
+                    for x in c.tolist()
+                ],
+                np.int64,
+            )[inv]
+            total = np.zeros(len(nodes), np.int64)
+            np.add.at(total, d, q[s])
+            # int64 -> double is exact up to 2**53, and 1e18 is an exact
+            # double, so one IEEE division rounds once; larger sums take
+            # Python's correctly rounded int division
+            summed = total / 1e18
+            wide = np.flatnonzero(total > 2**53)
+            summed[wide] = [t / 10**18 for t in total[wide].tolist()]
+            rank = (1.0 - damping) / n + damping * summed
+        yield pa.RecordBatch.from_arrays(
+            [nodes, pa.array(rank, pa.float64())], names=["node", "rank"]
+        )
+
+    pair = e.select(
+        F.col("src").cast(node_t).alias("src"),
+        F.col("dst").cast(node_t).alias("dst"),
+    )
+    return pair.repartition(1).mapInArrow(part, out_schema)
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iterations: int = 5,
     damping: float = 0.85,
-    in_memory_edges: int = 30_000_000,
+    in_memory_edges: int = 8_000_000,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over an edge list — the canonical
-    iterative-join algorithm, included to demonstrate how this engine
-    runs fixpoint graph workloads (the CC routine above converges by
-    checksum; PageRank runs a declared iteration budget, the common
-    production choice because rank deltas stabilize long before exact
-    convergence).
+    """Fixed-iteration PageRank over an edge list, returning
+    ``(node, rank)`` — the canonical iterative-join algorithm, run for
+    a declared iteration budget (the common production choice: rank
+    deltas stabilize long before exact convergence).
 
     Semantics: dangling nodes (no out-edges) hold rank but leak their
-    mass (the simple formulation most SQL engines mirror 1:1 —
-    deterministic and cross-engine reproducible). Initial rank 1/N;
-    each round: rank = (1-d)/N + d * Σ_in rank/out_deg.
+    mass (the simple formulation most SQL engines mirror 1:1).
+    Initial rank 1/N; each round: rank = (1-d)/N + d * Σ_in rank/out_deg,
+    with the per-node sums accumulated in decimal(38,18), so results are
+    identical across partitionings, task orders and the two paths.
 
-    Determinism at scale: per-round contribution sums accumulate in
-    decimal(38,18), so results are identical across partitionings and
-    task orders — the same discipline every gated aggregate in this
-    engine keeps. The loop is K chained (join + groupBy) stages, all
-    hashing on node id; ranks are localCheckpointed every round to
-    truncate lineage (without it, round k's plan re-derives rounds
-    1..k-1 and the DAG grows quadratically).
-
-    At 100 TB: out_deg and the node set are computed once; each
-    iteration shuffles edge-count rows on dst — pre-bucketing edges by
-    dst makes every round exchange-free on the big side.
-
-    Memory discipline (r12, revised r13; measured at sf100 = 600M
-    distinct edges / 21M nodes in one JVM): the edge checkpoint is
-    DISK_ONLY — a localCheckpoint's blocks are the lineage-truncation
-    point, so they pin storage memory for the whole loop if cached
-    on-heap, and the 600M-edge cache OOMed a 72g heap before round 1
-    (and, held alongside per-round execution memory, a 100g heap by
-    round 3). Edges are scanned once per round sequentially — exactly
-    the access pattern disk-backed storage is free for. r13 makes the
-    read path adaptive: at or below ``in_memory_edges`` (counted from
-    the materialized checkpoint — the count is the checkpoint's
-    materializing action, so it is not an extra derivation pass) a
-    MEMORY_AND_DISK ``persist()`` is layered on top, so small graphs
-    iterate against the columnar cache while the disk blocks remain
-    the lineage root — this reclaims the local-scale cost the r12
-    DISK_ONLY move introduced (sf0.1 bench 3.2→4.5s) without touching
-    the sf100 posture (above the threshold nothing changes).
-
-    Rank-generation discipline is adaptive on the same threshold.
-    ABOVE it (the sf100 regime), per-round ranks are checkpointed
-    EAGERLY so the superseded generation can be FREED immediately —
-    via ``_free_local_checkpoint`` (r13): ``Dataset.unpersist`` is a
-    silent no-op on checkpoint blocks (not CacheManager-registered),
-    so the r12 code's eager-release claim only held for the DISK_ONLY
-    edges; rank generations actually accumulated until driver GC. All
-    loop invariants are likewise freed before returning — the
-    returned frame is its own materialized checkpoint and owes them
-    nothing. AT OR BELOW the threshold, rank checkpoints stay LAZY
-    (lineage still truncates at first materialization, but the loop
-    issues zero barrier jobs — measured 5.6→5.1s at sf0.1,
-    interleaved same-session min-of-3) and nothing is freed eagerly:
-    K node-count generations are noise at small scale, the returned
-    plan still references the unmaterialized invariants, and the
-    session's usual cache hygiene (bench drops leftover persists;
-    ContextCleaner otherwise) reclaims them. None of this affects
-    results: storage level and materialization order do not touch
-    the decimal fold.
+    The edge count picks the path. At or below ``in_memory_edges`` all
+    rounds run in one Python task (``_pagerank_single_task``): the
+    distributed loop costs dozens of Spark jobs however small the
+    graph. Above it, K chained (join + groupBy) rounds hash on node id
+    against a DISK_ONLY edge checkpoint (memory discipline measured at
+    sf100 = 600M distinct edges / 21M nodes in one JVM: an on-heap edge
+    cache OOMed a 72g heap before round 1). Each rank generation is
+    checkpointed eagerly, so the superseded one is freed at once via
+    ``_free_local_checkpoint`` (``Dataset.unpersist`` is a no-op on
+    checkpoint blocks), and the loop invariants are freed before
+    returning: only the returned frame's own blocks stay pinned.
     """
     from pyspark import StorageLevel
 
-    # Loop invariants are localCheckpointed once: every iteration
-    # references e/nodes/out_deg/n_frame, and without truncation each
-    # round would re-derive them from the raw edge source (measured:
-    # 4x the per-round cost at sf0.1).
-    e_cp = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    # materialize + count in one action; small graphs then iterate
-    # against an on-heap columnar cache fed from the disk root
-    e = e_cp
-    small = e_cp.count() <= in_memory_edges
-    if small:
-        e = e_cp.persist(StorageLevel.MEMORY_AND_DISK)
+    pairs = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = pairs.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    # the count is the checkpoint's materializing action
+    if e.count() <= in_memory_edges:
+        _free_local_checkpoint(e)
+        return _pagerank_single_task(pairs, iterations, damping)
+    # Loop invariants are checkpointed once: every round references
+    # them, and without truncation each round would re-derive them from
+    # the raw edge source (measured: 4x the per-round cost at sf0.1).
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -423,10 +460,7 @@ def pagerank(
     ).localCheckpoint(eager=False)
     ranks = nodes.crossJoin(F.broadcast(n_frame)).select(
         "node", (F.lit(1.0) / F.col("n")).alias("rank")
-    )
-    # big graphs pay a barrier job per generation to gain the right to
-    # free the superseded one; small graphs skip both (docstring)
-    ranks = ranks.localCheckpoint(eager=not small)
+    ).localCheckpoint(eager=True)
     for _ in range(iterations):
         contribs = (
             e.join(out_deg, "src")
@@ -450,20 +484,14 @@ def pagerank(
                     + damping * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("rank"),
             )
-            # big path — eager: materialize THIS generation before
-            # dropping the previous one (lazy would pin all K
-            # generations until the terminal action)
-            .localCheckpoint(eager=not small)
+            # eager: materialize THIS generation before dropping the
+            # previous one (lazy would pin all K generations until the
+            # terminal action)
+            .localCheckpoint(eager=True)
         )
-        if not small:
-            _free_local_checkpoint(prev)
-    if not small:
-        # big path: the final ranks are their own (materialized)
-        # checkpoint; release everything the loop pinned before
-        # handing them back. Small path must NOT free — the returned
-        # lazy plan still references the unmaterialized invariants.
-        for invariant in (e_cp, nodes, out_deg, n_frame):
-            _free_local_checkpoint(invariant)
+        _free_local_checkpoint(prev)
+    for invariant in (e, nodes, out_deg, n_frame):
+        _free_local_checkpoint(invariant)
     return ranks
 
 

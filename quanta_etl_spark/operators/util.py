@@ -2,8 +2,31 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set session ``confs`` for the ``with`` body, then put every key
+    back as it was (its old value, or unset) on every exit path,
+    exceptions included — the one way this package scopes a conf
+    override. Session-wide for the duration: not safe against another
+    thread using the same session meanwhile."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def attach_exclusion_guard(

@@ -28,6 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
+from quanta_etl_spark.operators.util import scoped_conf
+
 
 def read_stream(
     spark: SparkSession,
@@ -459,7 +461,7 @@ def write_stream_memory(df: DataFrame, name: str, output_mode: str = "append"):
 
     Applies :data:`_EPHEMERAL_CHECKPOINT_CONFS` plus the data-derived
     :func:`_stream_shuffle_partitions` for the duration of query START
-    only (saved and restored around ``start()`` — a StreamExecution
+    only (``scoped_conf`` around ``start()`` — a StreamExecution
     captures session confs when it is constructed, so the restore
     cannot affect the launched query, and later DURABLE queries on the
     same session keep the protective defaults). Durable sinks are
@@ -474,15 +476,11 @@ def write_stream_memory(df: DataFrame, name: str, output_mode: str = "append"):
     concurrently on the same session from another thread during that
     window would capture the relaxed checkpoint confs for its real
     checkpoint. Start concurrent durable queries outside this call."""
-    spark = df.sparkSession
     confs = dict(_EPHEMERAL_CHECKPOINT_CONFS)
     parts = _stream_shuffle_partitions(df)
     if parts is not None:
         confs["spark.sql.shuffle.partitions"] = str(parts)
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(df.sparkSession, confs):
         return (
             df.writeStream.format("memory")
             .queryName(name)
@@ -490,12 +488,6 @@ def write_stream_memory(df: DataFrame, name: str, output_mode: str = "append"):
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def dedup_stream(

@@ -714,3 +714,83 @@ def test_free_local_checkpoint_releases_persisted_frames(spark):
     assert not (mine & _cached_rdd_ids(spark)), (
         "persisted frame still cached after _free_local_checkpoint"
     )
+
+
+# ---------------------------------------------------------------------------
+# PageRank: the single-task kernel against the distributed rounds
+# ---------------------------------------------------------------------------
+
+
+def _random_edges(n_nodes, n_edges, seed):
+    import random
+
+    rng = random.Random(seed)
+    return [
+        (rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)
+    ]
+
+
+_PAGERANK_GRAPHS = {
+    # node 6 is dangling; (1, 2) twice; 3 -> 3 is a self-loop
+    "dangling_duplicates_selfloop": (
+        [(1, 2), (1, 2), (2, 3), (3, 3), (3, 1), (4, 1), (5, 6)],
+        "src int, dst int",
+    ),
+    "null_src_and_dst": (
+        [(None, "a"), ("b", None), ("a", "b"), ("b", "c"), ("c", "a")],
+        "src string, dst string",
+    ),
+    # ids past 2**53, with a NULL: a float64 detour would merge them
+    "bigint_ids": (
+        [(2**62 + 1, 2**62 + 2), (2**62 + 2, 2**62 + 1), (2**62 + 3, None),
+         (7, 2**62 + 1)],
+        "src bigint, dst bigint",
+    ),
+    "empty": ([], "src string, dst string"),
+    # per-node sums below 2**53 / 1e18, the kernel's one-division range
+    "random_500_nodes": (_random_edges(500, 4000, 3), "src bigint, dst bigint"),
+}
+
+
+@pytest.mark.parametrize("graph", sorted(_PAGERANK_GRAPHS))
+def test_pagerank_kernel_bit_identical_to_distributed_rounds(spark, graph):
+    """Below the edge gate PageRank runs all rounds in one Python task;
+    ``in_memory_edges=0`` forces the distributed rounds. Both must give
+    the same ``(node, rank)`` set to the bit, and the same schema (the
+    node column keeps the input's id type)."""
+    rows, schema = _PAGERANK_GRAPHS[graph]
+    e = spark.createDataFrame(rows, schema)
+    kernel = graph_ops.pagerank(e)
+    big = graph_ops.pagerank(e, in_memory_edges=0)
+    assert kernel.schema == big.schema
+    assert kernel.schema["node"].dataType == e.schema["src"].dataType
+    got = {(r.node, r.rank.hex()) for r in kernel.collect()}
+    want = {(r.node, r.rank.hex()) for r in big.collect()}
+    graph_ops._free_local_checkpoint(big)
+    assert got == want
+    nodes = {n for edge in rows for n in edge}
+    assert {n for n, _ in got} == nodes
+
+
+def test_pagerank_query_job_count_and_residue(spark, sf_dir):
+    """``graph_pagerank`` at sf0.001 takes the single-task path: the
+    same job count on two runs, at most 8 (the distributed rounds ran
+    45-50, and their count varied run to run under adaptive
+    execution), and no persisted RDD left behind after the action."""
+    import __spark_entry__ as E
+
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for run in range(2):
+            before = set(sc._jsc.getPersistentRDDs().keySet())
+            group = f"pagerank-structure-{run}"
+            sc.setJobGroup(group, group)
+            assert E.q_graph_pagerank(spark, sf_dir).count() > 0
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            left = set(sc._jsc.getPersistentRDDs().keySet()) - before
+            assert not left, f"run {run} left persisted RDDs {left}"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs[0] == jobs[1] <= 8, jobs

@@ -369,15 +369,14 @@ class TestGraphHotHub:
         assert max(ranks, key=ranks.get) == "hub"
 
     def test_pagerank_big_path_equals_small_and_frees_blocks(self, spark):
-        """r13: pagerank's memory discipline is adaptive on a counted
-        edge threshold — small graphs iterate lazily against an
-        in-memory cache, big graphs take DISK_ONLY edges + eager rank
-        checkpoints with real RDD-level frees. The two paths must be
-        bit-identical (storage level and materialization order never
-        touch the decimal fold), and the big path must leave ONLY the
-        returned frame's own checkpoint blocks pinned (Dataset.unpersist
-        is a no-op on checkpoint blocks; _free_local_checkpoint reaches
-        the RDD — the r12 code leaked every superseded generation)."""
+        """pagerank picks its path on a counted edge threshold: small
+        graphs run every round in one Python task, big graphs take
+        DISK_ONLY edges + eager rank checkpoints with real RDD-level
+        frees. The two paths must be bit-identical, and the big path
+        must leave ONLY the returned frame's own checkpoint blocks
+        pinned (Dataset.unpersist is a no-op on checkpoint blocks;
+        _free_local_checkpoint reaches the RDD — the r12 code leaked
+        every superseded generation)."""
         e = self._star(spark)
         for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
             rdd.unpersist()

@@ -1103,3 +1103,46 @@ def test_stream_query_matches_duckdb_oracle(spark, sf_dir, duck_oracle, name):
     d_hash, d_n = canonicalize(d_rows, d_cols)
     assert s_n > 0
     assert (s_hash, s_n) == (d_hash, d_n)
+
+
+def test_scoped_conf_restores_on_every_exit_path(spark):
+    """A set key gets its old value back and an unset key is unset
+    again, also when the body raises."""
+    from quanta_etl_spark.operators.util import scoped_conf
+
+    unset_key = "spark.quanta.test.scopedConf"
+    set_key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(set_key)
+    with pytest.raises(RuntimeError):
+        with scoped_conf(spark, {set_key: "7", unset_key: "x"}):
+            assert spark.conf.get(set_key) == "7"
+            assert spark.conf.get(unset_key) == "x"
+            raise RuntimeError("body failed")
+    assert spark.conf.get(set_key) == before
+    assert spark.conf.get(unset_key, None) is None
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["stream_stateful_running", "stream_sliding_window", "stream_hourly_stats"],
+)
+def test_stream_query_restores_session_confs(spark, sf_dir, name):
+    """A stream query pins UTC and nanosAsLong only while it is built
+    and run: on a Europe/Berlin session the session stays at
+    Europe/Berlin, and the canonical hash is the one a UTC session
+    gives. stream_sliding_window emits epoch seconds, so it fails if
+    the stream's NTZ->TIMESTAMP cast sees Berlin; stream_hourly_stats
+    formats its window starts after the run, so it fails unless the
+    time zone is fixed when the frame is built, inside the scope."""
+    import __spark_entry__ as E
+    from quanta_etl_spark.operators.util import scoped_conf
+    from tools.check_oracle import canonicalize, spark_result
+
+    tz, nanos = "spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong"
+    query = E.queries()[name]
+    utc = canonicalize(*spark_result(query(spark, sf_dir)))
+    with scoped_conf(spark, {tz: "Europe/Berlin", nanos: "false"}):
+        berlin = canonicalize(*spark_result(query(spark, sf_dir)))
+        assert spark.conf.get(tz) == "Europe/Berlin"
+        assert spark.conf.get(nanos) == "false"
+    assert berlin == utc
