@@ -25,6 +25,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from quanta_etl_spark.functions.text import portable_hash60, ws_tokens
+from quanta_etl_spark.operators.dedup import _mix64
 from quanta_etl_spark.operators.util import spread as _spread
 
 
@@ -71,8 +72,6 @@ def _gram_hash_arrays(texts, n: int, word_cache: dict) -> list:
     import hashlib
 
     import numpy as np
-
-    from quanta_etl_spark.operators.dedup import _mix64
 
     out = []
     for t in texts:

@@ -27,9 +27,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 
-def _dedup_edges(edges: DataFrame, a: str, b: str) -> DataFrame:
-    """Canonical undirected edge set: (lo, hi), self-loops dropped."""
-    lo, hi = F.least(F.col(a), F.col(b)), F.greatest(F.col(a), F.col(b))
+def _canonical_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Canonical undirected simple edge set (a < b): least/greatest
+    orientation, self-loops dropped, duplicates collapsed — the shared
+    first step of every undirected-graph operator here (one fix to
+    edge canonicalization lands everywhere)."""
+    lo, hi = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
     return (
         edges.select(lo.alias("a"), hi.alias("b"))
         .where(F.col("a") != F.col("b"))
@@ -71,7 +74,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     edges and fragmented the true 100×15,000-member clustering into
     ~700 pieces — silently, because the composed checksum was stable.
     Every graph below ``small_graph_edges`` dodged the bug via the
-    union-find path, which is why eleven rounds of sf0.01/sf1 sweeps
+    single-task path, which is why eleven rounds of sf0.01/sf1 sweeps
     never caught it."""
     # direct every edge from the larger endpoint to the smaller,
     # regardless of the input's orientation
@@ -136,58 +139,61 @@ def _free_local_checkpoint(df: DataFrame) -> None:
         pass
 
 
-def _cc_single_task(e: DataFrame) -> DataFrame:
-    """Union-find over the whole edge set in ONE executor task — the
-    small-graph fast path. Star contraction costs ~4 Spark jobs per
-    round no matter how small the graph is; below a few hundred
-    thousand edges that fixed overhead dwarfs the work, and a
-    path-compressed disjoint-set over one partition answers in
-    milliseconds. The output contract is identical to the distributed
-    path: (node, component=min reachable id), one row per node."""
-    import pandas as pd
+def _single_task(
+    pair: DataFrame, kernel, value: str, value_t=None
+) -> DataFrame:
+    """Run a small graph through ``kernel`` in ONE executor task — the
+    path below an iterative operator's edge gate, where the distributed
+    rounds cost several Spark jobs each however small the graph is.
 
-    node_t = e.schema["a"].dataType
-    out_schema = (
-        f"node {node_t.simpleString()}, component {node_t.simpleString()}"
+    ``pair`` is a two-column id frame (source, target; one row per
+    edge). Both columns are concatenated and encoded to dense indices
+    in id order: index i is the i-th smallest id, so an index minimum
+    is an id minimum. A NULL id is one more node, the last index.
+    ``kernel(n, k, s, d)`` gets the node count, the count of non-NULL
+    nodes (the NULL node, if any, is index ``k``) and the per-edge
+    index arrays, and returns one value per node: doubles emitted as
+    ``value_t``, or, with ``value_t=None``, node indices emitted as the
+    ids they encode. Output: ``(node, <value>)``, the node column in
+    the input's id type.
+
+    Arrow in, Arrow out (``mapInArrow``): pandas would turn a bigint id
+    column holding a NULL into float64, and ids past 2**53 stay exact.
+    The closure imports only numpy, pyarrow and the standard library,
+    never this package, so a worker without it installed can run it."""
+    from pyspark.sql.types import StructField, StructType
+
+    a, b = pair.columns
+    node_t = pair.select(a).union(pair.select(b)).schema[0].dataType
+    out_schema = StructType(
+        [StructField("node", node_t), StructField(value, value_t or node_t)]
     )
 
-    def part(pdfs):
-        parent: dict = {}
+    def part(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
+        batches = list(batches)
+        m = sum(t.num_rows for t in batches)
+        if m == 0:
+            return
+        ids = pa.concat_arrays(
+            [t.column(0) for t in batches] + [t.column(1) for t in batches]
+        )
+        nodes = pc.unique(ids)
+        nodes = nodes.take(pc.array_sort_indices(nodes))  # NULL sorts last
+        idx = pc.index_in(ids, value_set=nodes, skip_nulls=False).to_numpy()
+        n = len(nodes)
+        out = kernel(n, n - nodes.null_count, idx[:m], idx[m:])
+        values = pa.array(out) if value_t else nodes.take(pa.array(out))
+        yield pa.RecordBatch.from_arrays([nodes, values], names=["node", value])
 
-        for pdf in pdfs:
-            for u, v in zip(pdf["a"], pdf["b"]):
-                if u not in parent:
-                    parent[u] = u
-                if v not in parent:
-                    parent[v] = v
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    # union by id: larger root under smaller keeps the
-                    # min-id-as-label invariant without a second pass
-                    if rv < ru:
-                        ru, rv = rv, ru
-                    parent[rv] = ru
-        if parent:
-            nodes = list(parent)
-            yield pd.DataFrame(
-                {"node": nodes, "component": [find(n) for n in nodes]}
-            )
-
-    # coalesce(1), not repartition(1): the input is already
-    # materialized (persisted/checkpointed by connected_components),
-    # so one task reading the cached blocks directly beats a
-    # 1-partition shuffle of the whole edge set (r14; narrow
-    # dependency, zero shuffle I/O). Union-find is order-insensitive,
-    # so the partition traversal order cannot change the labels.
-    return e.coalesce(1).mapInPandas(part, out_schema)
+    # A persisted input is read in place by one task (a narrow coalesce:
+    # no shuffle, no extra job); any other input is shuffled to one
+    # partition, so the stages above it keep their parallelism.
+    one = pair.select(*[F.col(c).cast(node_t).alias(c) for c in (a, b)])
+    one = one.coalesce(1) if pair.is_cached else one.repartition(1)
+    return one.mapInArrow(part, out_schema)
 
 
 def connected_components(
@@ -203,11 +209,12 @@ def connected_components(
 
     Size-adaptive: the deduped edge count (already computed for the
     convergence checksum) picks the algorithm. At or below
-    ``small_graph_edges`` the whole graph goes through one union-find
-    task (dedup-pair graphs are tiny relative to their corpus — bounded
-    by the duplicate count, not the corpus size); above it, the
-    O(log n)-round star contraction whose every step is a plain hash
-    shuffle. Pass ``small_graph_edges=0`` to force the distributed path.
+    ``small_graph_edges`` the whole graph goes through one min-label
+    kernel in one task (dedup-pair graphs are tiny relative to their
+    corpus — bounded by the duplicate count, not the corpus size);
+    above it, the O(log n)-round star contraction whose every step is a
+    plain hash shuffle. Pass ``small_graph_edges=0`` to force the
+    distributed path.
 
     Each iteration eagerly localCheckpoints the edge frame: the output
     of round k is consumed by both round k+1 and the convergence
@@ -225,10 +232,34 @@ def connected_components(
     """
     from pyspark import StorageLevel
 
-    e = _dedup_edges(edges, a, b).persist(StorageLevel.MEMORY_AND_DISK)
+    e = _canonical_undirected(edges, a, b).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     prev = _edge_checksum(e)
     if prev[0] <= small_graph_edges:
-        return _cc_single_task(e)
+
+        def min_labels(n, k, s, d):
+            # Hook the larger of each edge's two root labels to the
+            # smaller, pointer-jump every label to its root, and repeat
+            # on the edges whose endpoints still differ. Labels only
+            # fall and lab[i] <= i, so each root is its tree's minimum
+            # index — the minimum member id.
+            import numpy as np
+
+            lab = np.arange(n)
+            while len(s):
+                ls, ld = lab[s], lab[d]
+                live = ls != ld
+                s, d, ls, ld = s[live], d[live], ls[live], ld[live]
+                lo = np.minimum(ls, ld)
+                np.minimum.at(lab, ls, lo)
+                np.minimum.at(lab, ld, lo)
+                jumped = lab[lab]
+                while not np.array_equal(jumped, lab):
+                    lab, jumped = jumped, jumped[jumped]
+            return lab
+
+        return _single_task(e, min_labels, "component")
     for _ in range(max_iterations):
         superseded = e
         e = _small_star(_large_star(e)).localCheckpoint(eager=True)
@@ -323,7 +354,7 @@ def apply_dedup(
 
 
 def _pagerank_single_task(
-    e: DataFrame, iterations: int, damping: float
+    pair: DataFrame, iterations: int, damping: float
 ) -> DataFrame:
     """All ``iterations`` rounds of ``pagerank`` in ONE executor task —
     the small-graph path, with the distributed rounds' arithmetic to
@@ -334,46 +365,22 @@ def _pagerank_single_task(
     converts back with one correctly rounded division, as Spark's
     decimal->double cast does. A NULL id follows the equi-joins: it
     counts in N and keeps (1-d)/N, sending and receiving nothing, and a
-    NULL dst still counts in its source's out-degree.
+    NULL dst still counts in its source's out-degree."""
+    from pyspark.sql.types import DoubleType
 
-    Arrow in, Arrow out (``mapInArrow``): pandas would turn a bigint id
-    column holding a NULL into float64. The closure imports nothing
-    from this package, so a worker without it installed can run it."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    node_t = e.select("src").union(e.select("dst")).schema[0].dataType
-    out_schema = StructType(
-        [StructField("node", node_t), StructField("rank", DoubleType())]
-    )
-
-    def part(batches):
+    def rounds(n, k, s, d):
         from decimal import ROUND_HALF_UP, Decimal
 
         import numpy as np
-        import pyarrow as pa
 
-        batches = list(batches)
-        m = sum(b.num_rows for b in batches)
-        if m == 0:
-            return
-        ids = pa.concat_arrays(
-            [b.column(0) for b in batches] + [b.column(1) for b in batches]
-        ).dictionary_encode()
-        nodes = ids.dictionary
-        if ids.indices.null_count:  # the NULL id is one more node, index k
-            nodes = pa.concat_arrays([nodes, pa.nulls(1, nodes.type)])
-        k = len(ids.dictionary)
-        idx = ids.indices.fill_null(k).to_numpy()
-        s, d = idx[:m], idx[m:]
-        deg = np.bincount(s[s < k], minlength=len(nodes))
+        deg = np.bincount(s[s < k], minlength=n)
         live = (s < k) & (d < k)
         s, d = s[live], d[live]
         senders = np.flatnonzero(deg)
-        n = float(len(nodes))
-        rank = np.full(len(nodes), 1.0 / n)
+        rank = np.full(n, 1.0 / n)
         for _ in range(iterations):
             c, inv = np.unique(rank[senders] / deg[senders], return_inverse=True)
-            q = np.zeros(len(nodes), np.int64)
+            q = np.zeros(n, np.int64)
             q[senders] = np.array(
                 [
                     int(Decimal(repr(x)).scaleb(18).to_integral_value(ROUND_HALF_UP))
@@ -381,7 +388,7 @@ def _pagerank_single_task(
                 ],
                 np.int64,
             )[inv]
-            total = np.zeros(len(nodes), np.int64)
+            total = np.zeros(n, np.int64)
             np.add.at(total, d, q[s])
             # int64 -> double is exact up to 2**53, and 1e18 is an exact
             # double, so one IEEE division rounds once; larger sums take
@@ -390,15 +397,9 @@ def _pagerank_single_task(
             wide = np.flatnonzero(total > 2**53)
             summed[wide] = [t / 10**18 for t in total[wide].tolist()]
             rank = (1.0 - damping) / n + damping * summed
-        yield pa.RecordBatch.from_arrays(
-            [nodes, pa.array(rank, pa.float64())], names=["node", "rank"]
-        )
+        return rank
 
-    pair = e.select(
-        F.col("src").cast(node_t).alias("src"),
-        F.col("dst").cast(node_t).alias("dst"),
-    )
-    return pair.repartition(1).mapInArrow(part, out_schema)
+    return _single_task(pair, rounds, "rank", DoubleType())
 
 
 def pagerank(
@@ -493,21 +494,6 @@ def pagerank(
     for invariant in (e, nodes, out_deg, n_frame):
         _free_local_checkpoint(invariant)
     return ranks
-
-
-def _canonical_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Canonical undirected simple edge set (a < b): least/greatest
-    orientation, self-loops dropped, duplicates collapsed — the shared
-    first step of every undirected-graph operator here (one fix to
-    edge canonicalization lands everywhere)."""
-    return (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
 
 
 def _both_directions(e: DataFrame) -> DataFrame:
@@ -674,15 +660,7 @@ def link_prediction_jaccard(
     the scale knob — cap or sample super-hub adjacency in the same way
     the dedup family caps hot buckets.
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _canonical_undirected(edges, src, dst).localCheckpoint(eager=False)
     adj = e.select(F.col("a").alias("n"), F.col("b").alias("nb")).union(
         e.select(F.col("b").alias("n"), F.col("a").alias("nb"))
     )

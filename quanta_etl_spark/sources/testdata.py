@@ -17,6 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from quanta_etl_spark.operators.util import scoped_conf
+
 TABLES = (
     "region",
     "nation",
@@ -41,10 +43,11 @@ _NANO_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown testdata table {name!r}; have {TABLES}")
-    # Runtime-settable legacy conf; set defensively in case the session
-    # wasn't built by quanta_etl_spark.session.get_spark.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    # The legacy conf is needed while the schema is resolved, here; the
+    # scan at action time reads the long column without it (vectorized
+    # and row-based readers alike), so the caller's value comes back.
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for c in _NANO_TS_COLS.get(name, ()):
         if dict(df.dtypes).get(c) == "bigint":
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))

@@ -3,6 +3,11 @@ assumes about __spark_entry__ itself."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import __spark_entry__ as E
 
 
@@ -487,3 +492,41 @@ def test_varchar_roundtrip_is_identity_on_int_and_double_operands():
         " IS DISTINCT FROM CAST(x AS DOUBLE)"
     ).fetchone()[0]
     assert ibad == 0
+
+
+# Run from a working directory outside the repo, with the repo on the
+# driver's sys.path only: Python workers then cannot import the package
+# (checked first), so every kernel must carry what it calls.
+_PORTABLE_RUN = """
+import importlib.util, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.driver.memory", "1g").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+probe = spark.sparkContext.parallelize([0], 1).map(
+    lambda _: importlib.util.find_spec("quanta_etl_spark") is None)
+assert probe.collect() == [True], "workers can import the package"
+import __spark_entry__ as E
+for name in sys.argv[3:]:
+    print(name, len(E.queries()[name](spark, sys.argv[2]).collect()), flush=True)
+spark.stop()
+"""
+
+
+def test_kernels_run_on_workers_without_the_package(sf_dir, tmp_path):
+    """``corpus_decontaminate``, ``graph_pagerank`` and ``dedup_clusters``
+    run their Python kernels on workers that cannot import
+    ``quanta_etl_spark``: a kernel that imports from it inside its own
+    body fails there with ``ModuleNotFoundError``."""
+    names = ["corpus_decontaminate", "graph_pagerank", "dedup_clusters"]
+    repo = str(Path(__file__).resolve().parents[1])
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", _PORTABLE_RUN, repo, sf_dir, *names],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    rows = dict(line.split() for line in run.stdout.splitlines())
+    assert list(rows) == names and all(int(n) > 0 for n in rows.values())

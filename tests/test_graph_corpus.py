@@ -54,7 +54,7 @@ def test_cc_converges_in_few_iterations(spark):
 def test_cc_distributed_path_long_chain(spark):
     # small_graph_edges=0 forces the star-contraction rounds — the
     # 100-TB path must stay correct even though small inputs default to
-    # the single-task union-find
+    # the single-task min-label kernel
     got = _cc_map(spark, [(i, i + 1) for i in range(40)], small_graph_edges=0)
     assert set(got.values()) == {0}
     assert len(got) == 41
@@ -80,7 +80,8 @@ def test_cc_distributed_path_mod_stitched_sparse_ids(spark):
     star families stitched through congruent SPARSE ids. This replica
     (hashed ids, two mod-key families, star edges per key class like
     multikey_clusters builds) fragments 11-vs-10 under the old
-    operator; the fixed one must agree with union-find exactly."""
+    operator; the fixed one must agree with the single-task kernel
+    exactly."""
     ids = sorted({(i * 2654435761) % (1 << 31) for i in range(3000)})
     rows = [(v, f"e{v % 70}", f"p{v % 90}") for v in ids]
     ents = spark.createDataFrame(rows, "id long, ek string, pk string")
@@ -717,7 +718,7 @@ def test_free_local_checkpoint_releases_persisted_frames(spark):
 
 
 # ---------------------------------------------------------------------------
-# PageRank: the single-task kernel against the distributed rounds
+# The single-task kernels against the distributed rounds
 # ---------------------------------------------------------------------------
 
 
@@ -730,7 +731,20 @@ def _random_edges(n_nodes, n_edges, seed):
     ]
 
 
-_PAGERANK_GRAPHS = {
+def _shuffled_chain(n_nodes, base, seed):
+    """A path over ``n_nodes`` ids from ``base`` up, in shuffled id and
+    edge order, so neither id order nor row order follows the path."""
+    import random
+
+    rng = random.Random(seed)
+    ids = [base + 3 * i for i in range(n_nodes)]
+    rng.shuffle(ids)
+    edges = list(zip(ids, ids[1:]))
+    rng.shuffle(edges)
+    return edges
+
+
+_GRAPHS = {
     # node 6 is dangling; (1, 2) twice; 3 -> 3 is a self-loop
     "dangling_duplicates_selfloop": (
         [(1, 2), (1, 2), (2, 3), (3, 3), (3, 1), (4, 1), (5, 6)],
@@ -749,27 +763,66 @@ _PAGERANK_GRAPHS = {
     "empty": ([], "src string, dst string"),
     # per-node sums below 2**53 / 1e18, the kernel's one-division range
     "random_500_nodes": (_random_edges(500, 4000, 3), "src bigint, dst bigint"),
+    # three components; the minimum label is the byte-wise smallest id
+    "string_ids": (
+        [("pear", "apple"), ("apple", "Zebra"), ("kiwi", "fig"),
+         ("éclair", "kiwi"), ("mango", "mango"), ("b", "a b")],
+        "src string, dst string",
+    ),
+    # one component whose minimum sits mid-path
+    "bigint_chain_2000": (
+        _shuffled_chain(2000, 2**53 + 1, 5), "src bigint, dst bigint"
+    ),
 }
 
 
-@pytest.mark.parametrize("graph", sorted(_PAGERANK_GRAPHS))
+def _cc(e, **kw):
+    return graph_ops.connected_components(e, "src", "dst", **kw)
+
+
+# operator -> (call, the gate value that forces the distributed path,
+# the node set it labels: PageRank keeps every endpoint, NULL included;
+# connected components drops NULL endpoints and self-loops)
+_SINGLE_TASK_OPERATORS = {
+    "pagerank": (
+        graph_ops.pagerank,
+        {"in_memory_edges": 0},
+        lambda rows: {n for edge in rows for n in edge},
+    ),
+    "connected_components": (
+        _cc,
+        {"small_graph_edges": 0},
+        lambda rows: {
+            n for u, v in rows if None not in (u, v) and u != v for n in (u, v)
+        },
+    ),
+}
+
+
+def _bits(df):
+    return {
+        tuple(v.hex() if isinstance(v, float) else v for v in r)
+        for r in df.collect()
+    }
+
+
+@pytest.mark.parametrize("graph", sorted(_GRAPHS))
 def test_pagerank_kernel_bit_identical_to_distributed_rounds(spark, graph):
-    """Below the edge gate PageRank runs all rounds in one Python task;
-    ``in_memory_edges=0`` forces the distributed rounds. Both must give
-    the same ``(node, rank)`` set to the bit, and the same schema (the
-    node column keeps the input's id type)."""
-    rows, schema = _PAGERANK_GRAPHS[graph]
+    """Below its edge gate each of PageRank and connected components
+    runs in one Python task on the shared ``_single_task`` harness; a
+    gate of 0 forces the distributed rounds. For both operators the two
+    paths must give the same output set to the bit, and the same schema
+    (the node column keeps the input's id type)."""
+    rows, schema = _GRAPHS[graph]
     e = spark.createDataFrame(rows, schema)
-    kernel = graph_ops.pagerank(e)
-    big = graph_ops.pagerank(e, in_memory_edges=0)
-    assert kernel.schema == big.schema
-    assert kernel.schema["node"].dataType == e.schema["src"].dataType
-    got = {(r.node, r.rank.hex()) for r in kernel.collect()}
-    want = {(r.node, r.rank.hex()) for r in big.collect()}
-    graph_ops._free_local_checkpoint(big)
-    assert got == want
-    nodes = {n for edge in rows for n in edge}
-    assert {n for n, _ in got} == nodes
+    for op, (run, forced, nodes) in _SINGLE_TASK_OPERATORS.items():
+        kernel, big = run(e), run(e, **forced)
+        assert kernel.schema == big.schema, op
+        assert kernel.schema["node"].dataType == e.schema["src"].dataType, op
+        got, want = _bits(kernel), _bits(big)
+        graph_ops._free_local_checkpoint(big)
+        assert got == want, op
+        assert {r[0] for r in got} == nodes(rows), op
 
 
 def test_pagerank_query_job_count_and_residue(spark, sf_dir):

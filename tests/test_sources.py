@@ -765,3 +765,37 @@ def test_compact_parquet_migration_warns_on_unrecognized_entries(
         if w.category is UserWarning
         and "recognized flat-parquet" in str(w.message)
     ]
+
+
+@pytest.mark.parametrize("vectorized", ["true", "false"])
+def test_load_table_scopes_the_nanos_conf(spark, tmp_path, vectorized):
+    """``load_table`` sets ``nanosAsLong`` only while it resolves the
+    schema: the caller's session gets its value back, and the frame,
+    collected after that, still reads the ns column right (truncated to
+    microseconds), with the vectorized parquet reader on and off."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quanta_etl_spark.sources.testdata import load_table
+
+    ns = [1_700_000_000_123_456_789, 1_600_000_000_000_001_999, None]
+    pq.write_table(
+        pa.table({"id": [1, 2, 3], "ts": pa.array(ns, pa.timestamp("ns", "UTC"))}),
+        tmp_path / "events.parquet",
+    )
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    reader = "spark.sql.parquet.enableVectorizedReader"
+    saved = {k: spark.conf.get(k, None) for k in (nanos, reader)}
+    try:
+        spark.conf.unset(nanos)
+        spark.conf.set(reader, vectorized)
+        df = load_table(spark, str(tmp_path), "events")
+        assert spark.conf.get(nanos, None) is None
+        got = df.orderBy("id").select(F.unix_micros("ts")).collect()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert [r[0] for r in got] == [1_700_000_000_123_456, 1_600_000_000_000_001, None]

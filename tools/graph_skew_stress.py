@@ -108,9 +108,9 @@ def main() -> int:
     # small-star orientation bug — star families stitched through
     # congruent SPARSE ids (the sf10 multikey entity graph). Chains
     # and near-cliques converge under large-star alone, so THIS is the
-    # adversarial input for the star-contraction loop; the union-find
-    # fast path is the exact baseline (the whole edge set fits one
-    # task). Asserts label-for-label equality.
+    # adversarial input for the star-contraction loop; the single-task
+    # min-label kernel is the exact baseline (the whole edge set fits
+    # one task). Asserts label-for-label equality.
     n_ids = 1_500_000
     ents = (
         spark.range(n_ids)
@@ -142,17 +142,17 @@ def main() -> int:
     d_labels = {r["node"]: r["component"] for r in dist.collect()}
     t_dist = time.time() - t0
     t0 = time.time()
-    uf = G.connected_components(cc_edges, small_graph_edges=1 << 62)
-    u_labels = {r["node"]: r["component"] for r in uf.collect()}
-    t_uf = time.time() - t0
+    one = G.connected_components(cc_edges, small_graph_edges=1 << 62)
+    k_labels = {r["node"]: r["component"] for r in one.collect()}
+    t_one = time.time() - t0
     n_comp = len(set(d_labels.values()))
     print(
         f"cc mod-stitched: {n_edges} edges, {len(d_labels)} nodes, "
         f"{n_comp} components; star-contraction {t_dist:.1f}s, "
-        f"union-find {t_uf:.1f}s"
+        f"single-task kernel {t_one:.1f}s"
     )
-    assert d_labels == u_labels, (
-        "distributed CC labels diverge from union-find baseline"
+    assert d_labels == k_labels, (
+        "distributed CC labels diverge from the single-task kernel baseline"
     )
     spark.stop()
     return 0
