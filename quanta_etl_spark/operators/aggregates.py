@@ -699,6 +699,15 @@ def basket_lift(
     blocking discipline as the co-supply graph). Item totals broadcast
     back; counts exact, ratios one fixed expression. Ties in the
     top-k break on the item pair.
+
+    Trade-off: the distinct (basket, item) frame is materialized with
+    an eager ``localCheckpoint`` so its four consumers read it once.
+    So the call itself launches Spark jobs (the scan and the distinct),
+    before any action on the result; the checkpoint is not
+    fault-tolerant (blocks live on the executors that computed them,
+    and a lost executor fails the query instead of recomputing); and
+    those blocks stay pinned until the returned frame is dropped and
+    garbage-collected on the driver.
     """
     # Eagerly materialized (r14): this distinct frame feeds FOUR
     # independent subtrees — the basket-count aggregate, the item

@@ -9,28 +9,48 @@ anti-patterns fixed:
   SURVEY.md §1.4).
 * The product-spec dimension join (etl.py:160-164) carries an explicit
   ``broadcast`` hint: 2,728 dim rows vs an unbounded fact side.
-* The frame is ``persist()``-ed before the multi-sink fan-out — the
-  reference recomputes the full scan+join for each of its three write
-  actions (etl.py:162-175, SURVEY.md §3.4).
-* Quality checks (missing_isin / missing_underlying, etl.py:166-168)
-  come from the generic ``offenders`` operator.
+* One scan for the three sinks: the reference recomputes the full
+  scan+join for each of its three write actions (etl.py:162-175,
+  SURVEY.md §3.4). Here both null-key checks (missing_isin /
+  missing_underlying, etl.py:166-168) are observed as metrics of the
+  main write, and the two small sinks are written from what was
+  observed. Nothing is persisted, so the frame is never written twice.
+* Without an output path the checks are the generic ``offenders``
+  operator's lazy frames.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from quanta_etl_spark.operators.joins import broadcast_dim_join
 from quanta_etl_spark.operators.quality import offenders
 from quanta_etl_spark.pipelines.xetra import with_trading_ts
 from quanta_etl_spark.schemas import EUREX_SCHEMA, PRODUCT_SPEC_SCHEMA
-from quanta_etl_spark.sources.readers import read_csv, write_partitioned_parquet
+from quanta_etl_spark.sources.readers import (
+    read_csv,
+    read_parquet,
+    write_partitioned_parquet,
+)
 
 # Dimension columns consumed by the enrichment (reference etl.py:160-161).
 DIM_COLS = ["product_name", "product_type", "underlying_name", "underlying_category"]
+
+# Key columns of both quality reports (reference etl.py:167-168).
+QUALITY_KEYS = ["market_segment", "mleg"]
+
+# Largest observed offender set written from the driver. An observed set
+# holds at most one entry per distinct (market_segment, mleg) pair of the
+# fact data: the product spec lists 2,728 segments and mleg takes a
+# handful of values, so a full Eurex history stays below this. Past it
+# the sink is built from a read of the parquet the main write just
+# committed (4 of its ~40 columns) instead of from a driver-side table.
+MAX_OBSERVED_PAIRS = 10_000
 
 
 def with_maturity(df: DataFrame) -> DataFrame:
@@ -76,30 +96,72 @@ def process_eurex(
     output_path: str | None = None,
 ) -> EurexResult:
     """scan → trading_ts → maturity → dim join → quality checks →
-    (optionally) 3 partitioned sinks off ONE persisted lineage."""
+    (optionally) 3 partitioned sinks from ONE scan.
+
+    With ``output_path`` the enriched frame is written to
+    ``<output_path>/eurex`` (by ``trading_date``) with both null-key
+    checks observed inside that write; ``missing_isin`` and
+    ``missing_underlying`` are then written by ``market_segment`` from
+    the observed pairs, and the result holds those small frames. The
+    returned ``enriched`` frame stays lazy: acting on it scans again.
+    Without ``output_path`` all three result frames are lazy."""
     df = enrich_with_product_spec(
         with_maturity(with_trading_ts(load_eurex(spark, input_path))),
         load_product_spec(spark, dim_path),
     )
-    missing_isin = offenders(df, F.col("isin").isNull(), ["market_segment", "mleg"])
-    missing_underlying = offenders(
-        df, F.col("underlying_symbol").isNull(), ["market_segment", "mleg"]
+    rules = {
+        "missing_isin": F.col("isin").isNull(),
+        "missing_underlying": F.col("underlying_symbol").isNull(),
+    }
+    if output_path is None:
+        sinks = {name: offenders(df, bad, QUALITY_KEYS) for name, bad in rules.items()}
+    else:
+        sinks = _write_with_observed_checks(spark, df, rules, output_path)
+    return EurexResult(df, sinks["missing_isin"], sinks["missing_underlying"])
+
+
+def _write_with_observed_checks(
+    spark: SparkSession, df: DataFrame, rules: dict[str, Column], output_path: str
+) -> dict[str, DataFrame]:
+    """Write ``df`` and one offender sink per rule, scanning ``df`` once.
+
+    Each rule's offender set is ``collect_set`` of the key struct under
+    the rule, observed in the main write: ``when`` yields NULL for good
+    rows, which ``collect_set`` drops, while a pair with a NULL ``mleg``
+    is a non-NULL struct and is kept. The sinks have ``df.select(keys)``'s
+    schema and layout. An empty set writes only ``_SUCCESS``, as the
+    lazy ``offenders`` frame does."""
+    # An Observation serves one Dataset only: a fresh one per call.
+    obs = Observation()
+    pair = F.struct(*QUALITY_KEYS)
+    main = f"{output_path}/eurex"
+    write_partitioned_parquet(
+        df.observe(
+            obs,
+            *[F.collect_set(F.when(bad, pair)).alias(n) for n, bad in rules.items()],
+        ),
+        main,
+        "trading_date",
     )
-    if output_path is not None:
-        df = df.persist()
-        try:
-            write_partitioned_parquet(df, f"{output_path}/eurex", "trading_date")
-            write_partitioned_parquet(
-                missing_isin, f"{output_path}/missing_isin", "market_segment"
+    observed = obs.get
+    key_schema = df.select(*QUALITY_KEYS).schema
+    sinks = {}
+    for name, bad in rules.items():
+        pairs = observed[name]
+        if len(pairs) <= MAX_OBSERVED_PAIRS:
+            # An Arrow table plans a LocalTableScan (no Python worker)
+            # whatever the session's Arrow setting; one partition writes
+            # one file per market_segment.
+            table = pa.Table.from_pylist(
+                [p.asDict() for p in pairs], schema=to_arrow_schema(key_schema)
             )
-            write_partitioned_parquet(
-                missing_underlying,
-                f"{output_path}/missing_underlying",
-                "market_segment",
-            )
-        finally:
-            df.unpersist()
-    return EurexResult(df, missing_isin, missing_underlying)
+            sink = spark.createDataFrame(table, key_schema).coalesce(1)
+        else:
+            # The main write has committed: read it back, never fail here.
+            sink = offenders(read_parquet(spark, main), bad, QUALITY_KEYS)
+        write_partitioned_parquet(sink, f"{output_path}/{name}", "market_segment")
+        sinks[name] = sink
+    return sinks
 
 
 def join_derivative_to_underlying(

@@ -6,8 +6,10 @@ Differences from the reference, by design (SURVEY.md §1.4):
   (the reference's etl.py:56-59 accidentally de-types it). A
   format-compatible string view is available via ``as_reference_strings``
   for golden-matching against reference output.
-* Output parquet is partitioned by ``trading_date`` (etl.py:62) with a
-  file-size cap to avoid the small-files hazard.
+* Output parquet is partitioned by ``trading_date`` (etl.py:62). No
+  per-file record cap is passed, so each scan task writes one file per
+  ``trading_date`` it holds; ``write_partitioned_parquet`` takes
+  ``max_records_per_file`` for callers that need a cap.
 """
 
 from __future__ import annotations

@@ -1,6 +1,7 @@
 """End-to-end golden tests of the rebuilt reference pipelines over the
 reference's own sample data (read-only at /root/reference/sample-data;
-row counts per SURVEY.md §5: xetra 15,057, eurex 3,546, dim 2,728)."""
+row counts per SURVEY.md §5: xetra 15,057, eurex 3,546, dim 2,728),
+plus Eurex sink tests over tiny synthetic CSVs written per test."""
 
 from __future__ import annotations
 
@@ -18,11 +19,12 @@ XETRA_CSV = f"{SAMPLE}/2020-11-24_BINS_XETR08.csv"
 EUREX_CSV = f"{SAMPLE}/2020-11-24_BINS_XEUR08.csv"
 DIM_CSV = "/root/reference/dags/dimension_data/eurex_product_specification.csv"
 
-pytestmark = pytest.mark.skipif(
+needs_sample = pytest.mark.skipif(
     not os.path.exists(XETRA_CSV), reason="reference sample data unavailable"
 )
 
 
+@needs_sample
 def test_xetra_pipeline_golden(spark, tmp_path):
     out = XT.process_xetra(spark, XETRA_CSV, str(tmp_path / "xetra"))
     assert out.count() == 15057
@@ -41,6 +43,7 @@ def test_xetra_pipeline_golden(spark, tmp_path):
     assert any(f.name.startswith("trading_date=") for f in (tmp_path / "xetra").iterdir())
 
 
+@needs_sample
 def test_eurex_pipeline_golden(spark):
     res = EX.process_eurex(spark, EUREX_CSV, DIM_CSV)
     df = res.enriched
@@ -58,6 +61,7 @@ def test_eurex_pipeline_golden(spark):
     assert r.maturity_months == pytest.approx(r.maturity_days / 30.5)
 
 
+@needs_sample
 def test_eurex_quality_checks_match_reference_shape(spark):
     res = EX.process_eurex(spark, EUREX_CSV, DIM_CSV)
     for qc in (res.missing_isin, res.missing_underlying):
@@ -66,6 +70,7 @@ def test_eurex_quality_checks_match_reference_shape(spark):
         assert qc.count() == qc.dropDuplicates().count()
 
 
+@needs_sample
 def test_derivative_underlying_join(spark):
     xetra = XT.process_xetra(spark, XETRA_CSV)
     res = EX.process_eurex(spark, EUREX_CSV, DIM_CSV)
@@ -109,6 +114,7 @@ _README_EUREX = {
 }
 
 
+@needs_sample
 def test_pipeline_schemas_match_reference_data_model(spark):
     """Golden schema check against the reference README's data-model
     tables (README.md:120-171): every documented column exists with
@@ -125,6 +131,7 @@ def test_pipeline_schemas_match_reference_data_model(spark):
     assert got_e == _README_EUREX
 
 
+@needs_sample
 def test_job_registry_runs_reference_main(spark, tmp_path):
     """The job registry's full_etl mirrors the reference main():
     both pipelines run sequentially to partitioned parquet."""
@@ -153,3 +160,166 @@ def test_job_registry_runs_reference_main(spark, tmp_path):
     )
     with pytest.raises(KeyError):
         jobs.get_job("nope")
+
+
+# -- Eurex sinks over synthetic input ----------------------------------------
+
+_EUREX_HEADER = (
+    "ISIN,MarketSegment,UnderlyingSymbol,UnderlyingISIN,Currency,SecurityType,"
+    "MaturityDate,StrikePrice,PutOrCall,MLEG,ContractGenerationNumber,"
+    "SecurityID,Date,Time,StartPrice,MaxPrice,MinPrice,EndPrice,"
+    "NumberOfContracts,NumberOfTrades"
+)
+_SINKS = ("missing_isin", "missing_underlying")
+
+
+def _bar(isin: str, seg: str, sym: str, mleg: str, time: str = "08:00") -> str:
+    """One Eurex CSV line; an empty field reads back as NULL."""
+    return ",".join(
+        [isin, seg, sym, "DE000U000001", "EUR", "OPT", "20201218", "100.0",
+         "C", mleg, "1", "1001", "2020-11-24", time, "1.0", "1.5", "0.5",
+         "1.2", "10", "2"]
+    )
+
+
+def _market(root, files: list[list[str]]) -> tuple[str, str]:
+    """Write each list of bars as one hourly Eurex CSV, plus a product spec
+    (25 positional columns) for segments AAAA-CCCC; return (glob, dim)."""
+    day = root / "in" / "2020-11-24"
+    day.mkdir(parents=True)
+    for hour, bars in enumerate(files, start=8):
+        (day / f"2020-11-24_BINS_XEUR{hour:02d}.csv").write_text(
+            "\n".join([_EUREX_HEADER, *bars]) + "\n"
+        )
+    dim = root / "in" / "product_spec.csv"
+    dim.write_text(
+        "\n".join(
+            [",".join(f"c{i}" for i in range(25))]
+            + [",".join([seg, f"PRODUCT {seg}", *[""] * 23]) for seg in ("AAAA", "BBBB", "CCCC")]
+        )
+        + "\n"
+    )
+    return str(day.parent / "*" / "*_BINS_XEUR*.csv"), str(dim)
+
+
+# Offenders repeat across the two files; AAAA and ZZZZ have a NULL mleg
+# pair; ZZZZ is missing both keys and has no product spec row.
+_OFFENDER_FILES = [
+    [
+        _bar("", "AAAA", "U1", "OSTR"),
+        _bar("", "AAAA", "U1", ""),
+        _bar("DE1", "BBBB", "", "FUT"),
+        _bar("DE2", "CCCC", "U2", ""),
+    ],
+    [
+        _bar("", "AAAA", "U1", "OSTR", "09:00"),
+        _bar("DE1", "BBBB", "", "FUT", "09:00"),
+        _bar("", "ZZZZ", "", "", "09:00"),
+    ],
+]
+_CLEAN_FILES = [[_bar("DE1", "AAAA", "U1", "OSTR"), _bar("DE2", "BBBB", "U2", "")]]
+
+
+def _pairs(frame) -> list[tuple]:
+    return sorted((tuple(r) for r in frame.select(*EX.QUALITY_KEYS).collect()), key=str)
+
+
+def _sink_pairs(spark, out: str) -> dict[str, list[tuple]]:
+    return {name: _pairs(spark.read.parquet(f"{out}/{name}")) for name in _SINKS}
+
+
+@pytest.mark.parametrize("source", ["reference_sample", "synthetic"])
+def test_eurex_write_scans_once_and_persists_nothing(spark, tmp_path, source):
+    """With an output path, process_eurex runs at most 4 jobs in its job
+    group (the persisted fan-out ran 7), leaves no persisted RDD and no
+    SQL cache entry behind, and each sink reads back equal to the lazy
+    ``offenders`` frame over the returned enriched frame."""
+    from quanta_etl_spark.operators.quality import offenders
+
+    if source == "reference_sample":
+        if not os.path.exists(EUREX_CSV):
+            pytest.skip("reference sample data unavailable")
+        inputs = (EUREX_CSV, DIM_CSV)
+    else:
+        inputs = _market(tmp_path, _OFFENDER_FILES)
+    sc = spark.sparkContext
+    out = str(tmp_path / "out")
+    group = f"eurex-structure-{source}"
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    sc.setJobGroup(group, group)
+    try:
+        res = EX.process_eurex(spark, *inputs, out)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs <= 4, jobs
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == before
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.lookupCachedData(res.enriched._jdf).isEmpty()
+    got = _sink_pairs(spark, out)
+    for name, bad in (
+        ("missing_isin", F.col("isin").isNull()),
+        ("missing_underlying", F.col("underlying_symbol").isNull()),
+    ):
+        assert got[name] == _pairs(offenders(res.enriched, bad, EX.QUALITY_KEYS)), name
+        assert _pairs(getattr(res, name)) == got[name], name
+
+
+def test_eurex_sinks_keep_null_mleg_and_dedupe_across_files(spark, tmp_path):
+    """A (segment, NULL) pair is an offender like any other, a pair seen
+    in two files is written once, and each market_segment directory holds
+    one file, as the shuffled ``offenders`` write laid them out."""
+    out = tmp_path / "out"
+    EX.process_eurex(spark, *_market(tmp_path, _OFFENDER_FILES), str(out))
+    assert _sink_pairs(spark, str(out)) == {
+        "missing_isin": [("AAAA", "OSTR"), ("AAAA", None), ("ZZZZ", None)],
+        "missing_underlying": [("BBBB", "FUT"), ("ZZZZ", None)],
+    }
+    for name in _SINKS:
+        for seg_dir in (out / name).glob("market_segment=*"):
+            assert len(list(seg_dir.glob("*.parquet"))) == 1, seg_dir
+    assert spark.read.parquet(str(out / "eurex")).count() == 7
+
+
+def test_eurex_no_null_keys_writes_success_only(spark, tmp_path):
+    """No offenders: each sink directory holds ``_SUCCESS`` alone, the
+    layout an empty ``offenders`` frame's write leaves."""
+    out = tmp_path / "out"
+    res = EX.process_eurex(spark, *_market(tmp_path, _CLEAN_FILES), str(out))
+    for name in _SINKS:
+        files = sorted(p.name for p in (out / name).iterdir() if not p.name.startswith("."))
+        assert files == ["_SUCCESS"], name
+        assert getattr(res, name).count() == 0
+        assert getattr(res, name).columns == EX.QUALITY_KEYS
+
+
+def test_eurex_back_to_back_writes_to_one_path(spark, tmp_path):
+    """Two calls on one session to the same output path both complete
+    (each write observes through its own Observation) and the second
+    overwrites the first."""
+    inputs = _market(tmp_path, _OFFENDER_FILES)
+    out = str(tmp_path / "out")
+    results = []
+    for _ in range(2):
+        EX.process_eurex(spark, *inputs, out)
+        results.append(_sink_pairs(spark, out))
+    assert results[0] == results[1]
+    assert len(results[0]["missing_isin"]) == 3
+
+
+def test_eurex_sinks_past_the_observed_cap_read_back_the_write(
+    spark, tmp_path, monkeypatch
+):
+    """Past ``MAX_OBSERVED_PAIRS`` a sink is built from the parquet the main
+    write committed, and its rows equal the observed path's."""
+    inputs = _market(tmp_path, _OFFENDER_FILES)
+    observed = str(tmp_path / "observed")
+    EX.process_eurex(spark, *inputs, observed)
+    monkeypatch.setattr(EX, "MAX_OBSERVED_PAIRS", 0)
+    fallback = str(tmp_path / "fallback")
+    res = EX.process_eurex(spark, *inputs, fallback)
+    assert _sink_pairs(spark, fallback) == _sink_pairs(spark, observed)
+    for name in _SINKS:
+        files = getattr(res, name).inputFiles()
+        assert files and all(f"{fallback}/eurex/" in f for f in files), name

@@ -11,7 +11,9 @@ micro-batch path (planning, state store, sink commit) executes.
 from __future__ import annotations
 
 import datetime as dt
+import json
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -1063,6 +1065,58 @@ def test_per_key_state_scan_sorts_across_arrow_chunks(spark, tmp_path, op):
             spark.conf.set(key, prev)
     assert len(expected) == len(rows)
     assert got == expected
+
+
+# A group whose value column is NULL on every row, so each of its 2-row
+# chunks is all-NA there: the entries whose dtype inference pandas has
+# deprecated in concatenation.
+_ALL_NA_GROUP = {
+    _CHUNK_BAR_SCHEMA: [
+        ("DE0003", _T0 + dt.timedelta(minutes=m), None) for m in range(3)
+    ],
+    _CHUNK_EVENT_SCHEMA: [
+        (3, 300 + i, _T0 + dt.timedelta(seconds=i), None) for i in range(3)
+    ],
+}
+_STEP_INPUT_DTYPES = {
+    _CHUNK_BAR_SCHEMA: {
+        "isin": "object", "trading_ts": "datetime64[ns]", "end_price": "float64",
+    },
+    _CHUNK_EVENT_SCHEMA: {
+        "user_id": "int64", "event_id": "int64", "ts": "datetime64[ns]",
+        "value": "float64",
+    },
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PER_KEY_STATE_OPS))
+def test_per_key_state_scan_step_input_dtypes(spark, tmp_path, monkeypatch, op):
+    """The pandas dtypes ``_keyed_state_scan`` hands each step function
+    are pinned per column, for every group, the all-NA one included, so
+    a pandas upgrade cannot change them silently. The step is swapped
+    for a probe that reports its frame's dtypes as its output."""
+    from quanta_etl_spark.operators.util import scoped_conf
+
+    build, rows, schema = _PER_KEY_STATE_OPS[op]
+    rows = rows + _ALL_NA_GROUP[schema]
+    scan = ingest._keyed_state_scan
+
+    def probing_scan(df, key, order, step, state_schema, output_schema):
+        def probe(key_vals, pdf, carried):
+            dtypes = json.dumps({c: str(t) for c, t in pdf.dtypes.items()})
+            return pd.DataFrame({"k": [str(key_vals[0])], "dtypes": [dtypes]}), None
+
+        return scan(df, key, order, probe, state_schema, "k string, dtypes string")
+
+    monkeypatch.setattr(ingest, "_keyed_state_scan", probing_scan)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    stream = ingest.read_stream(spark, src, spark.read.parquet(src).schema)
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "2"}):
+        seen = _run_to_memory(spark, build(stream), f"dtypes_{op}").collect()
+    assert sorted(r.k for r in seen) == sorted({str(r[0]) for r in rows})
+    for r in seen:
+        assert json.loads(r.dtypes) == _STEP_INPUT_DTYPES[schema], r.k
 
 
 def _stream_query_names() -> list[str]:
