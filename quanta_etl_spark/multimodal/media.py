@@ -43,6 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from quanta_etl_spark.operators.util import python_kernel
+
 __all__ = [
     "MEDIA_SCHEMA",
     "media_table",
@@ -197,7 +199,7 @@ def decode_image(
             yield pd.DataFrame(out)
 
     return df.select("media_id", "content", "width", "height").mapInPandas(
-        run, schema=DECODE_SCHEMA
+        python_kernel(run), schema=DECODE_SCHEMA
     )
 
 
@@ -231,7 +233,7 @@ def image_features(df: DataFrame) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
+    return df.mapInPandas(python_kernel(run), schema=FEATURE_SCHEMA)
 
 
 def resize_images(df: DataFrame, out_width: int, out_height: int) -> DataFrame:
@@ -258,7 +260,7 @@ def resize_images(df: DataFrame, out_width: int, out_height: int) -> DataFrame:
                 out["pixels"].append(resized.tobytes())
             yield pd.DataFrame(out)
 
-    return df.mapInPandas(run, schema=DECODE_SCHEMA)
+    return df.mapInPandas(python_kernel(run), schema=DECODE_SCHEMA)
 
 
 FRAME_SCHEMA = "media_id long, frame_index int, frame_ms long, frame binary"
@@ -302,7 +304,7 @@ def sample_video_frames(
             )
 
     return df.select("media_id", "content", "duration_ms").mapInPandas(
-        run, schema=FRAME_SCHEMA
+        python_kernel(run), schema=FRAME_SCHEMA
     )
 
 
@@ -356,7 +358,9 @@ def audio_features(df: DataFrame, sample_width: int = 2) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return df.select("media_id", "content").mapInPandas(run, schema=AUDIO_SCHEMA)
+    return df.select("media_id", "content").mapInPandas(
+        python_kernel(run), schema=AUDIO_SCHEMA
+    )
 
 
 PHASH_SCHEMA = "media_id long, phash_hi long, phash_lo long"
@@ -400,7 +404,7 @@ def perceptual_hash(decoded: DataFrame) -> DataFrame:
                 {"media_id": ids, "phash_hi": his, "phash_lo": los}
             )
 
-    return decoded.mapInPandas(run, PHASH_SCHEMA)
+    return decoded.mapInPandas(python_kernel(run), PHASH_SCHEMA)
 
 
 def phash_neardup_pairs(

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from quanta_etl_spark.functions.text import portable_hash60, ws_tokens
 from quanta_etl_spark.operators.dedup import _mix64
-from quanta_etl_spark.operators.util import spread as _spread
+from quanta_etl_spark.operators.util import python_kernel, spread as _spread
 
 
 def _row_hash(col: Column, variant: str) -> Column:
@@ -162,7 +162,7 @@ def decontaminate(
 
         bench_gh = (
             _spread(benchmark.select(text_col))
-            .mapInPandas(bench_grams_kernel, "__gh long")
+            .mapInPandas(python_kernel(bench_grams_kernel), "__gh long")
             .distinct()
         )
         if bench_gh.count() <= max_broadcast_grams:
@@ -197,7 +197,8 @@ def decontaminate(
                     )
 
             return _spread(corpus.select(id_col, text_col)).mapInPandas(
-                screen, f"{id_col} {id_dt}, n_overlap long, contaminated boolean"
+                python_kernel(screen),
+                f"{id_col} {id_dt}, n_overlap long, contaminated boolean",
             )
         # benchmark too large to broadcast as one array: fall through
 
@@ -455,7 +456,9 @@ def quality_filter(
             "top_bg_c long, n_raw long, text_len long, punct_c long, "
             + ", ".join(f"hits_{lang} long" for lang in lang_codes)
         )
-        sig = _spread(docs.select(id_col, text_col)).mapInPandas(kernel, schema)
+        sig = _spread(docs.select(id_col, text_col)).mapInPandas(
+            python_kernel(kernel), schema
+        )
 
         # ---- identical Catalyst derivations to the scalar functions ----
         # lang_id: argmax of hit counts, earlier code wins ties, 'und'

@@ -42,7 +42,7 @@ from quanta_etl_spark.functions.text import (
     ws_tokens,
 )
 from quanta_etl_spark.functions.vectors import cosine_similarity
-from quanta_etl_spark.operators.util import group_complete_slices
+from quanta_etl_spark.operators.util import group_complete_slices, python_kernel
 from quanta_etl_spark.operators.util import spread as _spread
 
 # 31-bit Mersenne prime: (a*h + b) mod P stays within signed-64 range
@@ -189,6 +189,7 @@ def minhash_signature_arrow(
     b_vec = np.array([b for _, b in seeds], dtype=np.int64)[:, None]
 
     @F.pandas_udf("array<int>")
+    @python_kernel
     def sig(texts: pd.Series) -> pd.Series:
         mat = _sig_matrix(list(texts), num_hashes, shingle_k, a_vec, b_vec)
         return pd.Series(list(mat))
@@ -493,12 +494,13 @@ def _fused_likely_pairs(
 
     banded = df.select(id_col, text_col)
     banded = _spread(banded).mapInPandas(
-        sig_bands, f"__id {id_dt}, band int, bhash bigint, __sig binary"
+        python_kernel(sig_bands),
+        f"__id {id_dt}, band int, bhash bigint, __sig binary",
     )
     return (
         banded.repartition(F.col("bhash"))
         .sortWithinPartitions("bhash", "__id")
-        .mapInPandas(gen_pairs, f"id_a {id_dt}, id_b {id_dt}")
+        .mapInPandas(python_kernel(gen_pairs), f"id_a {id_dt}, id_b {id_dt}")
     )
 
 
@@ -823,6 +825,7 @@ def _verify_pairs_arrow(
     )
 
     @F.pandas_udf("long")
+    @python_kernel
     def n_grams(t: pd.Series) -> pd.Series:
         def count(s):
             s = re.sub(r"\s+", " ", (s or "").lower()).strip()
@@ -875,6 +878,7 @@ def _verify_pairs_arrow(
     )
 
     @F.pandas_udf("double")
+    @python_kernel
     def jac(ta: pd.Series, tb: pd.Series) -> pd.Series:
         # memoize gram sets per distinct text within the batch: a doc
         # in k surviving pairs would otherwise rebuild its set k times

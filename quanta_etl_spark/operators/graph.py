@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from quanta_etl_spark.operators.util import python_kernel
+
 
 def _canonical_undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Canonical undirected simple edge set (a < b): least/greatest
@@ -193,7 +195,7 @@ def _single_task(
     # partition, so the stages above it keep their parallelism.
     one = pair.select(*[F.col(c).cast(node_t).alias(c) for c in (a, b)])
     one = one.coalesce(1) if pair.is_cached else one.repartition(1)
-    return one.mapInArrow(part, out_schema)
+    return one.mapInArrow(python_kernel(part), out_schema)
 
 
 def connected_components(

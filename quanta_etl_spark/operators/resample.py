@@ -15,6 +15,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from quanta_etl_spark.operators.util import python_kernel
+
 
 def time_bucket(ts: Column | str, interval: str) -> Column:
     """Truncate a timestamp to a bucket. Supports the date_trunc units
@@ -346,7 +348,7 @@ def holt_forecast(
 
     return (
         daily.groupBy("__g")
-        .applyInPandas(fn, out_schema)
+        .applyInPandas(python_kernel(fn), out_schema)
         .select("day", "observed", "level", "trend", "fitted", "is_forecast")
     )
 
@@ -481,7 +483,7 @@ def holt_winters_forecast(
 
     return (
         daily.groupBy("__g")
-        .applyInPandas(fn, out_schema)
+        .applyInPandas(python_kernel(fn), out_schema)
         .select(
             "day", "observed", "level", "trend", "seasonal", "fitted",
             "is_forecast",

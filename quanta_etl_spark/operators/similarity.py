@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from quanta_etl_spark.functions.vectors import cosine_similarity, l2_distance
-from quanta_etl_spark.operators.util import spread as _spread
+from quanta_etl_spark.operators.util import python_kernel, spread as _spread
 
 
 def _scored(
@@ -567,7 +567,7 @@ def embedding_covariance(
                 )
 
         prods = (
-            vecs.mapInPandas(xtx, "i int, j int, prod long")
+            vecs.mapInPandas(python_kernel(xtx), "i int, j int, prod long")
             .groupBy("i", "j")
             .agg(F.sum("prod").alias("__sij"))
         )

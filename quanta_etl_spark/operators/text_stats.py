@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from quanta_etl_spark.functions.text import normalize_text, ws_tokens
+from quanta_etl_spark.operators.util import python_kernel
 
 
 def norm_tokens_py(t: str | None) -> list[str]:
@@ -114,7 +115,7 @@ def ngram_counts(
                 )
 
         partials = df.select(F.col(text_col)).mapInPandas(
-            kernel, out_schema
+            python_kernel(kernel), out_schema
         )
         counts = partials.groupBy("ngram").agg(
             F.sum("occurrences").alias("occurrences")
@@ -258,7 +259,7 @@ def repetition_stats(
                 )
 
         counts = _spread(df.select(id_col, text_col)).mapInPandas(
-            kernel,
+            python_kernel(kernel),
             f"doc_id {id_dt}, n_tokens long, n_distinct long, "
             "top_c long, n_bigrams long, top_bg_c long",
         )

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import functools
+import inspect
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager
 
@@ -27,6 +29,67 @@ def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def python_kernel(fn):
+    """Wrap ``fn`` as a Python kernel handed to Spark (``mapInPandas``,
+    ``mapInArrow``, ``applyInPandas``, ``applyInPandasWithState``,
+    ``pandas_udf``) — the one way this package does so. When ``fn``
+    returns (a generator function: when it is exhausted or closed),
+    the ``zipimport.zipimporter`` entries are dropped from
+    ``sys.path_importer_cache``.
+
+    Why: a PySpark worker calls ``importlib.invalidate_caches()`` at
+    the start of every task, and on CPython 3.10–3.12 each cached
+    zipimporter then re-reads its archive's whole central directory.
+    A reused worker holds 16 of them (12 for ``pyspark.zip`` and its
+    sub-packages, 2 for the spark-core jar on the worker path, 2 for
+    py4j), which costs 120–260 ms per task before the kernel runs.
+    A dropped entry is rebuilt on demand from
+    ``zipimport._zip_directory_cache`` without a read, so a later
+    import still works, and the next task's invalidation finds nothing
+    to re-read. Dropping after the kernel, not before it, also catches
+    the importers that a kernel's own first-call imports bring back.
+
+    Trade-offs: the first task in each fresh worker still pays (the
+    invalidation runs before any kernel). A zip rewritten on disk while
+    a worker lives is no longer noticed — as before Python 3.10.
+
+    The wrapper imports only ``sys`` and ``zipimport`` and uses no
+    package global, so a worker that cannot import this package still
+    runs the kernel. ``functools.wraps`` keeps the type hints
+    ``pandas_udf`` reads, and ``__signature__`` keeps the argument
+    count ``applyInPandas`` inspects to pass the grouping key."""
+
+    def prune():
+        import sys
+        import zipimport
+
+        cache = sys.path_importer_cache
+        for path, finder in list(cache.items()):
+            if isinstance(finder, zipimport.zipimporter):
+                cache.pop(path, None)
+
+    if inspect.isgeneratorfunction(fn):
+
+        @functools.wraps(fn)
+        def kernel(*args, **kwargs):
+            try:
+                yield from fn(*args, **kwargs)
+            finally:
+                prune()
+
+    else:
+
+        @functools.wraps(fn)
+        def kernel(*args, **kwargs):
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                prune()
+
+    kernel.__signature__ = inspect.signature(fn)
+    return kernel
 
 
 def attach_exclusion_guard(

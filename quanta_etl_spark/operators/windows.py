@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from quanta_etl_spark.operators.util import group_complete_slices
+from quanta_etl_spark.operators.util import group_complete_slices, python_kernel
 
 
 def _order_cols(order_by: Sequence[str | Column]) -> list[Column]:
@@ -66,7 +66,7 @@ def _grouped_sorted_map(
     return (
         projected.repartition(F.col(key))
         .sortWithinPartitions(key, *[F.asc_nulls_last(c) for c in order])
-        .mapInPandas(run, out_schema)
+        .mapInPandas(python_kernel(run), out_schema)
     )
 
 

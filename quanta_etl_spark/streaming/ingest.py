@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
-from quanta_etl_spark.operators.util import scoped_conf
+from quanta_etl_spark.operators.util import python_kernel, scoped_conf
 
 
 def read_stream(
@@ -199,7 +199,7 @@ def _keyed_state_scan(
         yield out
 
     return df.groupBy(key).applyInPandasWithState(
-        scan,
+        python_kernel(scan),
         outputStructType=output_schema,
         stateStructType=state_schema,
         outputMode="append",

@@ -516,11 +516,14 @@ spark.stop()
 
 
 def test_kernels_run_on_workers_without_the_package(sf_dir, tmp_path):
-    """``corpus_decontaminate``, ``graph_pagerank`` and ``dedup_clusters``
-    run their Python kernels on workers that cannot import
-    ``quanta_etl_spark``: a kernel that imports from it inside its own
-    body fails there with ``ModuleNotFoundError``."""
-    names = ["corpus_decontaminate", "graph_pagerank", "dedup_clusters"]
+    """``corpus_decontaminate``, ``graph_pagerank``, ``dedup_clusters``
+    and ``stream_stateful_running`` run their Python kernels on workers
+    that cannot import ``quanta_etl_spark``: a kernel that imports from
+    it inside its own body fails there with ``ModuleNotFoundError``."""
+    names = [
+        "corpus_decontaminate", "graph_pagerank", "dedup_clusters",
+        "stream_stateful_running",
+    ]
     repo = str(Path(__file__).resolve().parents[1])
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     run = subprocess.run(
@@ -530,3 +533,99 @@ def test_kernels_run_on_workers_without_the_package(sf_dir, tmp_path):
     assert run.returncode == 0, run.stderr[-3000:]
     rows = dict(line.split() for line in run.stdout.splitlines())
     assert list(rows) == names and all(int(n) > 0 for n in rows.values())
+
+
+# One core, so every task lands on the same reused Python worker: an
+# engine kernel runs first, then a probe task reports what the kernel
+# left in that worker's importer cache.
+_IMPORTER_PROBE = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.driver.memory", "1g").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+import __spark_entry__ as E
+assert E.queries()["graph_pagerank"](spark, sys.argv[2]).collect()
+
+def probe(batches):
+    import importlib, sys, zipimport
+    import pyarrow as pa
+    list(batches)
+    zips = sum(isinstance(f, zipimport.zipimporter)
+               for f in sys.path_importer_cache.values())
+    name = "pyspark.sql.avro.functions"
+    loaded = name in sys.modules
+    mod = importlib.import_module(name)
+    yield pa.RecordBatch.from_pylist(
+        [{"zips": zips, "loaded": loaded, "file": mod.__file__}])
+
+row = spark.range(1, numPartitions=1).mapInArrow(
+    probe, "zips long, loaded boolean, file string").collect()[0]
+print(row.zips, row.loaded, row.file)
+spark.stop()
+"""
+
+
+def test_kernels_leave_no_zip_importers_for_the_next_task(sf_dir, tmp_path):
+    """A PySpark worker calls ``importlib.invalidate_caches()`` at the
+    start of every task, which on CPython 3.10–3.12 re-reads the
+    central directory of every cached zipimporter (pyspark.zip, py4j,
+    the spark-core jar: ≥ 12 entries in a reused worker). After an
+    engine kernel (``python_kernel``) the worker holds none, and a
+    pyspark submodule that worker never loaded still imports from the
+    zip."""
+    repo = str(Path(__file__).resolve().parents[1])
+    run = subprocess.run(
+        [sys.executable, "-c", _IMPORTER_PROBE, repo, sf_dir],
+        cwd=tmp_path, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    zips, loaded, file = run.stdout.split()
+    assert int(zips) == 0
+    assert loaded == "False" and ".zip" in file
+
+
+def test_python_kernel_keeps_the_call_shape_and_prunes_after(tmp_path):
+    """The wrapper keeps what Spark reads off a kernel — the argument
+    count ``applyInPandas`` takes from ``getfullargspec`` (1 or 2 args
+    decides whether the key is passed) and the type hints
+    ``pandas_udf`` resolves — and drops the zipimporter entries only
+    once the kernel is done: a generator kernel when it is exhausted."""
+    import inspect
+    import typing
+    import zipfile
+    import zipimport
+
+    from quanta_etl_spark.operators.util import python_kernel
+
+    def keyed(key, pdf):
+        return pdf
+
+    def scalar(s: int) -> int:
+        return s
+
+    assert inspect.getfullargspec(python_kernel(keyed)).args == ["key", "pdf"]
+    assert typing.get_type_hints(python_kernel(scalar)) == {
+        "s": int, "return": int,
+    }
+
+    archive = str(tmp_path / "k.zip")
+    zipfile.ZipFile(archive, "w").close()
+
+    def gen(n):
+        yield from range(n)
+
+    wrapped = python_kernel(gen)
+    assert inspect.isgeneratorfunction(wrapped)
+    sys.path_importer_cache[archive] = zipimport.zipimporter(archive)
+    try:
+        it = wrapped(3)
+        assert next(it) == 0 and archive in sys.path_importer_cache
+        assert list(it) == [1, 2] and archive not in sys.path_importer_cache
+        sys.path_importer_cache[archive] = zipimport.zipimporter(archive)
+        assert python_kernel(scalar)(1) == 1
+        assert archive not in sys.path_importer_cache
+    finally:
+        sys.path_importer_cache.pop(archive, None)
