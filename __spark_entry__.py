@@ -46,7 +46,7 @@ from quanta_etl_spark.operators import sampling as samp_ops
 from quanta_etl_spark.operators import text_stats as ts_ops
 from quanta_etl_spark.operators import windows as win_ops
 from quanta_etl_spark.operators.util import scoped_conf
-from quanta_etl_spark.sources.testdata import load_table
+from quanta_etl_spark.sources.testdata import load_table, parquet_schema
 from quanta_etl_spark.streaming import ingest
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -109,7 +109,7 @@ def _events_stream(spark: SparkSession, sf: str) -> DataFrame:
     """The events table as a bounded file stream with its batch schema.
     A single-FILE stream source needs a glob spelling (a bare file path
     fails FileStreamSource's "basePath must be a directory" check)."""
-    raw_schema = spark.read.parquet(f"{sf}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf}/events.parquet")
     return ingest.read_stream(spark, f"{sf}/events.parque[t]", raw_schema)
 
 

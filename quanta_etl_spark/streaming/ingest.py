@@ -431,7 +431,13 @@ def _stream_shuffle_partitions(df: DataFrame) -> int | None:
       per-row kernel time, which parallelizes with partitions, while
       its single state store per partition keeps the fixed cost low —
       measured 1.8s → 4.1s when shrunk from 32 to 2 partitions,
-      the exact inverse of the built-in operators; or
+      the exact inverse of the built-in operators (sf0.1 on 32 cores,
+      ``local[32]``, while every Python task still paid 120–260 ms of
+      import-cache reads). Re-measured once that cost was gone, warm
+      ``stream_stateful_running`` at sf0.001 on 4 cores (``local[4]``)
+      at 1 / 2 / 4 partitions: 0.475 / 0.466 / 0.496 s in one probe,
+      0.76 / 0.66 / 0.57 s (median of 5) in a second — at 4 cores the
+      gap is within 1.35× and its sign is not settled; or
     * the input size is unknown (non-file sources, plan-walk failure).
     """
     try:

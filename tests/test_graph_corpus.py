@@ -827,11 +827,15 @@ def test_pagerank_kernel_bit_identical_to_distributed_rounds(spark, graph):
 
 def test_pagerank_query_job_count_and_residue(spark, sf_dir):
     """``graph_pagerank`` at sf0.001 takes the single-task path: the
-    same job count on two runs, at most 8 (the distributed rounds ran
+    same job count on two runs, at most 6 (the distributed rounds ran
     45-50, and their count varied run to run under adaptive
-    execution), and no persisted RDD left behind after the action."""
+    execution), and no persisted RDD left behind after the action.
+    A warm-up load infers ``lineitem``'s schema first, so neither run
+    pays that job."""
     import __spark_entry__ as E
+    from quanta_etl_spark.sources.testdata import load_table
 
+    load_table(spark, sf_dir, "lineitem")
     sc = spark.sparkContext
     jobs = []
     try:
@@ -840,10 +844,11 @@ def test_pagerank_query_job_count_and_residue(spark, sf_dir):
             group = f"pagerank-structure-{run}"
             sc.setJobGroup(group, group)
             assert E.q_graph_pagerank(spark, sf_dir).count() > 0
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
             left = set(sc._jsc.getPersistentRDDs().keySet()) - before
             assert not left, f"run {run} left persisted RDDs {left}"
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert jobs[0] == jobs[1] <= 8, jobs
+    assert jobs[0] == jobs[1] <= 6, jobs

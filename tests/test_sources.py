@@ -799,3 +799,74 @@ def test_load_table_scopes_the_nanos_conf(spark, tmp_path, vectorized):
             else:
                 spark.conf.set(k, v)
     assert [r[0] for r in got] == [1_700_000_000_123_456, 1_600_000_000_000_001, None]
+
+
+def _jobs_run_by(spark, group, call):
+    """``call()``'s result and the number of Spark jobs it launched
+    under the job group ``group`` (unique per call)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("vectorized", ["true", "false"])
+def test_load_table_infers_a_schema_once_per_listing_and_settings(
+    spark, tmp_path, vectorized
+):
+    """The first ``load_table`` of a table path runs the schema
+    inference job; a second one, with the file and the parquet reader
+    settings unchanged, launches no job, gives the same schema and
+    still reads the ns column right with the caller's ``nanosAsLong``
+    unset. A new file at the same path with another schema, and a
+    changed ``inferTimestampNTZ`` setting, each infer again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    from quanta_etl_spark.sources.testdata import load_table
+
+    path = tmp_path / "events.parquet"
+    ns = [1_700_000_000_123_456_789, None]
+    pq.write_table(
+        pa.table({"id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns", "UTC"))}),
+        path,
+    )
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    reader = "spark.sql.parquet.enableVectorizedReader"
+    ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    saved = {k: spark.conf.get(k, None) for k in (nanos, reader, ntz)}
+    group = f"schema-memo-{tmp_path.name}"
+    try:
+        spark.conf.unset(nanos)
+        spark.conf.unset(ntz)
+        spark.conf.set(reader, vectorized)
+        load = lambda: load_table(spark, str(tmp_path), "events")  # noqa: E731
+        first, first_jobs = _jobs_run_by(spark, f"{group}-first", load)
+        again, again_jobs = _jobs_run_by(spark, f"{group}-again", load)
+        assert (first_jobs >= 1, again_jobs) == (True, 0), (first_jobs, again_jobs)
+        assert again.schema == first.schema
+        assert spark.conf.get(nanos, None) is None
+        got = again.orderBy("id").select(F.unix_micros("ts")).collect()
+        assert [r[0] for r in got] == [1_700_000_000_123_456, None]
+
+        at = pa.array([1_700_000_000_000_000], pa.timestamp("us"))
+        pq.write_table(pa.table({"id": [1], "at": at}), path)
+        rewritten = load().schema
+        assert rewritten.names == ["id", "at"]
+        assert rewritten["at"].dataType == TimestampNTZType()
+        spark.conf.set(ntz, "false")
+        assert load().schema["at"].dataType == TimestampType()
+        spark.conf.set(ntz, "true")
+        assert load().schema["at"].dataType == TimestampNTZType()
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -1200,3 +1200,56 @@ def test_stream_query_restores_session_confs(spark, sf_dir, name):
         assert spark.conf.get(tz) == "Europe/Berlin"
         assert spark.conf.get(nanos) == "false"
     assert berlin == utc
+
+
+def test_stateful_running_query_job_count(spark, sf_dir):
+    """``stream_stateful_running`` at sf0.001, with a no-op write as
+    its action, runs the same number of Spark jobs on two runs, at most
+    2 per run: the jobs of its build and action plus the micro-batch
+    jobs, which run under the stream's own job group (its run id). A
+    warm-up load infers ``events``' schema first, so neither run pays
+    that job."""
+    import __spark_entry__ as E
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from quanta_etl_spark.sources.testdata import load_table
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self):
+            self.ids = []
+
+        def onQueryStarted(self, event):
+            self.ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    load_table(spark, sf_dir, "events")
+    sc = spark.sparkContext
+    runs = RunIds()
+    spark.streams.addListener(runs)
+    jobs = []
+    try:
+        for run in range(2):
+            group = f"stateful-running-structure-{run}"
+            started = len(runs.ids)
+            sc.setJobGroup(group, group)
+            try:
+                E.q_stream_stateful_running(spark, sf_dir).write.format(
+                    "noop"
+                ).mode("overwrite").save()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            groups = [group, *runs.ids[started:]]
+            assert len(groups) == 2, groups
+            jobs.append(
+                sum(len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups)
+            )
+    finally:
+        spark.streams.removeListener(runs)
+    assert jobs[0] == jobs[1] <= 2, jobs
